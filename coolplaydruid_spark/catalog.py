@@ -18,7 +18,8 @@ pruning + row-group skipping at scale.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import threading
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,12 +45,8 @@ class DataSource:
     # dimensions, numerics -> metrics) at query time.
     dimensions: list[str] | None = None
     metrics: list[str] | None = None
-    options: dict[str, str] = field(default_factory=dict)
 
     def load(self, spark: SparkSession) -> DataFrame:
-        reader = spark.read
-        for k, v in self.options.items():
-            reader = reader.option(k, v)
         nanos_cols = _nano_timestamp_columns(self.path)
         if nanos_cols:
             # The fixture Parquet stores TIMESTAMP(NANOS), which Spark's
@@ -59,7 +56,7 @@ class DataSource:
             # is native partition pruning; this conversion is a
             # fixture-compat shim.
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = reader.parquet(self.path)
+        df = spark.read.parquet(self.path)
         for c in nanos_cols:
             if c in df.columns:
                 if c == self.time_column:
@@ -82,22 +79,28 @@ def _nano_timestamp_columns(path: str) -> list[str]:
         schema = ds.dataset(path, format="parquet").schema
     except Exception:
         return []
-    out = []
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.append(field.name)
-    return out
+    return [f.name for f in schema if str(f.type).startswith("timestamp[ns")]
+
+
+@dataclass
+class Snapshot:
+    """One registration of a dataSource, Druid's immutable segment
+    *version* (arch/druid-arch.md:21): ETag and result cache key on
+    ``version``, and every query of it reads ``frame`` (loaded once)."""
+
+    source: DataSource
+    version: int
+    frame: DataFrame | None = None
 
 
 class Catalog:
-    """name → DataSource registry; resolves Druid dataSource specs
+    """name → Snapshot registry; resolves Druid dataSource specs
     (table / union / nested query) to DataFrames."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self._sources: dict[str, DataSource] = {}
-        self._frames: dict[str, DataFrame] = {}
+        self._snapshots: dict[str, Snapshot] = {}
+        self._lock = threading.Lock()
         self._lookups: dict[str, DataFrame] = {}
         self._lookup_version = 0
         self._registry_version = 0
@@ -172,37 +175,42 @@ class Catalog:
             name=name, path=path, time_column=time_column,
             dimensions=dimensions, metrics=metrics,
         )
-        self._sources[name] = source
-        # Monotonic: bumps on re-registration too (a replaced path or
-        # schema must invalidate metadata-view caches — sqlmeta.py).
-        self._registry_version += 1
-        # Re-registration must also evict the cached frame, or table()
-        # keeps serving the old path/schema until process restart.
-        self._frames.pop(name, None)
-        if df is not None:
-            if time_column and time_column in df.columns:
-                df = df.withColumn(TIME_COLUMN, F.col(time_column))
-            self._frames[name] = df
+        if df is not None and time_column and time_column in df.columns:
+            df = df.withColumn(TIME_COLUMN, F.col(time_column))
         if as_view:
             # SQL front-end (reference query/query-module-overview.md:48-49):
             # every dataSource is queryable via spark.sql directly.
-            self.table(name).createOrReplaceTempView(name)
+            df = source.load(self.spark) if df is None else df
+            df.createOrReplaceTempView(name)
+        with self._lock:
+            # Monotonic: bumps on re-registration too, and only once the
+            # new snapshot is in place (metadata views cache on it —
+            # sqlmeta.py).
+            self._snapshots[name] = Snapshot(source, self._registry_version + 1, df)
+            self._registry_version += 1
         return source
 
     def names(self) -> list[str]:
-        return sorted(self._sources)
+        return sorted(self._snapshots)
+
+    def snapshot(self, name: str) -> Snapshot | None:
+        return self._snapshots.get(name)
+
+    def _registered(self, name: str) -> Snapshot:
+        if name not in self._snapshots:
+            raise KeyError(f"unknown dataSource: {name!r}; known: {self.names()}")
+        return self._snapshots[name]
 
     def source(self, name: str) -> DataSource:
-        if name not in self._sources:
-            raise KeyError(f"unknown dataSource: {name!r}; known: {self.names()}")
-        return self._sources[name]
+        return self._registered(name).source
 
     def table(self, name: str) -> DataFrame:
-        if name in self._frames:
-            return self._frames[name]
-        df = self.source(name).load(self.spark)
-        self._frames[name] = df
-        return df
+        snap = self._registered(name)
+        if snap.frame is None:
+            with self._lock:
+                if snap.frame is None:
+                    snap.frame = snap.source.load(self.spark)
+        return snap.frame
 
     def resolve(self, datasource) -> DataFrame:
         """Resolve a Druid dataSource spec to a DataFrame.

@@ -18,6 +18,7 @@ cancel, timeout, and the JSON error envelope.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import threading
 import time
@@ -51,6 +52,12 @@ from coolplaydruid_spark.plans.timeseries import plan_timeseries
 from coolplaydruid_spark.plans.topn import plan_topn
 
 
+# Context keys that cannot change a query's answer, so they stay out of
+# its ETag / result-cache key: a per-request queryId must not defeat the
+# cache.
+_ANSWER_FREE_CONTEXT = {"queryId", "timeout", "priority", "useCache", "populateCache"}
+
+
 def _iso(v):
     """Result timestamps in Druid's ISO-8601 Z form."""
     return v.isoformat() + "Z" if hasattr(v, "isoformat") else v
@@ -62,9 +69,12 @@ class DruidEngine:
         self.spark = spark
         self.catalog = catalog or Catalog(spark)
         # ETag-keyed result cache (see execute()); plain FIFO bound —
-        # entries are invalidated by key churn, not eviction policy.
+        # entries are invalidated by key churn, not eviction policy. One
+        # lock guards lookup, eviction and insert: HTTP handler threads
+        # share it.
         self._result_cache: dict[str, list] = {}
         self._result_cache_max = result_cache_entries
+        self._result_cache_lock = threading.Lock()
         self._rollups: list[RollupSpec] = []
         # Per-query metrics ring buffer — the analogue of the reference's
         # QueryLifecycle.emitLogsAndMetrics (query/query-internal-procedure.md:
@@ -199,10 +209,10 @@ class DruidEngine:
         materialization time. Ingest that changes the base (append/
         overwrite) must re-materialize and re-register — or call
         unregister_rollups(base) — exactly as Druid re-builds rollup
-        segments; nothing here diffs the base table per query (a
-        per-query file listing of a 100 TB table would cost more than
-        many queries). The ETag key fingerprints the table actually
-        read, so a re-materialized rollup re-keys the result cache."""
+        segments; nothing here diffs the base table per query. The ETag
+        keys on the catalog version of the table actually read, so
+        re-registering the rollup table (``register_ingested`` is the
+        publish step) changes both its answers and its ETag."""
         self._rollups.append(spec)
 
     def unregister_rollups(self, base: str) -> int:
@@ -254,28 +264,23 @@ class DruidEngine:
         query_id = context.get("queryId") or str(uuid.uuid4())
         timeout_ms = context.get("timeout")
         t0 = time.perf_counter()
-        # Rollup routing happens BEFORE the cache key: the ETag must
-        # fingerprint the table the query actually reads (the rollup's
-        # files), not the base table's — otherwise a base-table change
-        # would mint a fresh key for a result served from the unchanged
-        # rollup. plan() also rewrites (for direct callers); rewriting
-        # here first makes that second pass a no-op.
-        if self._rollups and context.get("useRollup", True):
-            query = rewrite_with_rollup(self._rollups, query)
         # Result cache (context.useCache / populateCache, both default
         # true in Druid; the reference's caching/ETag machinery is
         # query/query-internal-procedure.md:41-47). Keyed by the ETag —
-        # canonical query + source files + mtimes — so any segment
-        # change mints a new key and stale entries simply stop being
-        # referenced. Entries hold serialized results (aggregation-sized);
-        # scan/select are never cached (Druid likewise only caches
-        # per-segment aggregates).
+        # canonical query + the catalog version of the table read — so
+        # re-registration mints a new key and stale entries simply stop
+        # being referenced; plan() resolves the table after the key is
+        # taken, so an entry is never older than its key's version.
+        # Entries hold serialized results
+        # (aggregation-sized); scan/select are never cached (Druid
+        # likewise only caches per-segment aggregates).
         cacheable = query.get("queryType") not in ("scan", "select")
         cache_key = None
         if cacheable and (context.get("useCache", True) or context.get("populateCache", True)):
             cache_key = self.etag(query)
         if cache_key and context.get("useCache", True):
-            hit = self._result_cache.get(cache_key)
+            with self._result_cache_lock:
+                hit = self._result_cache.get(cache_key)
             if hit is not None:
                 self._emit_metrics(query, query_id, t0, success=True,
                                    rows=len(hit), cache_hit=True)
@@ -339,9 +344,10 @@ class DruidEngine:
                 raise QueryTimeoutError()
             result = self.serialize(query, rows)
             if cache_key and context.get("populateCache", True):
-                if len(self._result_cache) >= self._result_cache_max:
-                    self._result_cache.pop(next(iter(self._result_cache)))
-                self._result_cache[cache_key] = result
+                with self._result_cache_lock:
+                    if len(self._result_cache) >= self._result_cache_max:
+                        self._result_cache.pop(next(iter(self._result_cache)))
+                    self._result_cache[cache_key] = result
             self._emit_metrics(query, query_id, t0, success=True, rows=len(result))
             return result
         except DruidQueryError as e:
@@ -428,37 +434,25 @@ class DruidEngine:
         )
 
     def etag(self, query: dict) -> str | None:
-        """ETag for If-None-Match caching
+        """ETag for If-None-Match caching and the result-cache key
         (query/query-internal-procedure.md:41-47): hash of the canonical
-        query + the referenced dataSource's files and mtimes (the Spark
-        analogue of Druid's per-segment-version cache key). None when the
-        dataSource isn't a plain registered table."""
-        import hashlib
-        import os
-
+        rollup-routed query and the catalog version of the table it reads
+        (Druid's per-segment-version cache key); no filesystem access.
+        FRESHNESS CONTRACT: ETag and answer change together, exactly on
+        (re)registration — ``register_ingested`` publishes an append.
+        None unless the dataSource is a registered path-backed table."""
+        if self._rollups and (query.get("context") or {}).get("useRollup", True):
+            query = rewrite_with_rollup(self._rollups, query)
         ds = query.get("dataSource")
         if isinstance(ds, dict):
             ds = ds.get("name") if ds.get("type", "table") == "table" else None
-        if not isinstance(ds, str):
+        snap = self.catalog.snapshot(ds) if isinstance(ds, str) else None
+        if snap is None or not snap.source.path:
             return None
-        try:
-            source = self.catalog.source(ds)
-        except KeyError:
-            return None
-        if not source.path:
-            return None
-        h = hashlib.md5(json.dumps(query, sort_keys=True, default=str).encode())
-        path = source.path
-        try:
-            if os.path.isdir(path):
-                for root, _, files in os.walk(path):
-                    for f in sorted(files):
-                        p = os.path.join(root, f)
-                        h.update(f"{p}:{os.path.getmtime(p)}".encode())
-            else:
-                h.update(f"{path}:{os.path.getmtime(path)}".encode())
-        except OSError:
-            return None
+        context = {k: v for k, v in (query.get("context") or {}).items()
+                   if k not in _ANSWER_FREE_CONTEXT}
+        canonical = [dict(query, context=context), ds, snap.version]
+        h = hashlib.md5(json.dumps(canonical, sort_keys=True, default=str).encode())
         return f'"{h.hexdigest()}"'
 
     # ---- result shaping -------------------------------------------------

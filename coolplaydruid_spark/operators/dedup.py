@@ -943,7 +943,10 @@ def banded_hamming_pairs(sig: DataFrame, band_cols: list, sig_cols: list[str],
         # the hamming filter ahead of the distinct, enumeration is a
         # cheap codegen inner loop that never shuffles.
         lb = bandify(reps)
-        evidence.record_blocking("banded_hamming", lb, ["band", "bits"])
+        # Evidence counts the member-scale table the grouping stands in
+        # for (lazy: only a capture() runs it), so capped and uncapped
+        # candidate volumes compare like with like.
+        evidence.record_blocking("banded_hamming", bandify(sig), ["band", "bits"])
         l, r = lb.alias("l"), lb.alias("r")
         rep_pairs = (
             l.join(r, (F.col("l.band") == F.col("r.band"))

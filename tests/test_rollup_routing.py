@@ -252,6 +252,9 @@ def test_etag_tracks_rollup_table_and_unregister_restores_raw(rolled_engine):
         .rewrite_with_rollup(rolled_engine._rollups, DAY_QUERY)
     )
     assert e1 is not None
+    # etag() routes itself, so the HTTP ETag (unrouted query) and the
+    # result-cache key are the same string
+    assert rolled_engine.etag(DAY_QUERY) == e1
     assert rolled_engine.unregister_rollups("events") == 1
     try:
         assert not _reads_rollup(rolled_engine.plan(DAY_QUERY))
