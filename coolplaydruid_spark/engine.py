@@ -271,9 +271,9 @@ class DruidEngine:
         # re-registration mints a new key and stale entries simply stop
         # being referenced; plan() resolves the table after the key is
         # taken, so an entry is never older than its key's version.
-        # Entries hold serialized results
-        # (aggregation-sized); scan/select are never cached (Druid
-        # likewise only caches per-segment aggregates).
+        # Entries hold serialized results (aggregation-sized); scan/select
+        # are never cached (Druid likewise only caches per-segment
+        # aggregates).
         cacheable = query.get("queryType") not in ("scan", "select")
         cache_key = None
         if cacheable and (context.get("useCache", True) or context.get("populateCache", True)):
