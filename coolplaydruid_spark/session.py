@@ -14,6 +14,10 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _ram_gib() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+
+
 def get_spark(
     app_name: str = "coolplaydruid_spark",
     master: str | None = None,
@@ -28,10 +32,13 @@ def get_spark(
         .appName(app_name)
         # Local mode hosts all executor threads inside the driver JVM —
         # Spark's 1g default heap dies with GCLocker alloc failures on
-        # multi-GB shuffles. Sized for the 128 GiB bench host; applies
-        # only when this factory creates the JVM (a driver-owned session
-        # keeps its own sizing).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # multi-GB shuffles. Sized for the 128 GiB bench host, capped at
+        # half the host's RAM: G1 grows the heap toward its maximum, and
+        # a maximum above physical RAM gets the JVM OOM-killed on small
+        # hosts. Applies only when this factory creates the JVM (a
+        # driver-owned session keeps its own sizing).
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", f"{min(24, max(1, _ram_gib() // 2))}g"))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
