@@ -36,7 +36,7 @@ def get_spark(
         # half the host's RAM: G1 grows the heap toward its maximum, and
         # a maximum above physical RAM gets the JVM OOM-killed on small
         # hosts. Applies only when this factory creates the JVM (a
-        # driver-owned session keeps its own sizing).
+        # caller-owned session keeps its own sizing).
         .config("spark.driver.memory", os.environ.get(
             "SPARK_GRAFT_DRIVER_MEM", f"{min(24, max(1, _ram_gib() // 2))}g"))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
