@@ -1,5 +1,6 @@
 """Shared planning helpers: interval filtering, the filtered base frame,
-and the zero-fill bucket spine."""
+the aggregation core of timeseries/topN/groupBy, and the zero-fill
+bucket spine."""
 
 from __future__ import annotations
 
@@ -9,12 +10,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from coolplaydruid_spark.catalog import RAW_TIME_NS, TIME_COLUMN
+from coolplaydruid_spark.functions.aggregators import compile_aggregators
+from coolplaydruid_spark.functions.extraction import (
+    dimension_column,
+    rewrite_list_filtered,
+    unwrap_list_filtered,
+)
 from coolplaydruid_spark.functions.filters import compile_filter
 from coolplaydruid_spark.functions.granularity import (
     Granularity,
     intervals_predicate,
+    parse_granularity,
     parse_interval,
 )
+from coolplaydruid_spark.functions.postaggs import compile_post_aggregators
+from coolplaydruid_spark.functions.theta import attach_theta, split_query
 
 BUCKET = "ts_bucket"
 
@@ -26,6 +36,12 @@ def _epoch_ns(dt: datetime) -> int:
     """Naive-UTC datetime → epoch nanoseconds, exact integer arithmetic
     (float .timestamp() loses sub-second precision past 2^53 ns)."""
     return ((dt - _EPOCH) // _US) * 1000
+
+
+def query_intervals(query: dict) -> list[str]:
+    """The query's ``intervals`` as a list (Druid also accepts one string)."""
+    intervals = query.get("intervals") or []
+    return [intervals] if isinstance(intervals, str) else list(intervals)
 
 
 def grouped_agg(base: DataFrame, key_cols: list, key_names: list[str], aggs) -> DataFrame:
@@ -116,10 +132,8 @@ def filtered_frame(df: DataFrame, query: dict, engine=None) -> DataFrame:
     TOC.md:39-40).
     """
     df = apply_virtual_columns(df, query, engine=engine)
-    intervals = query.get("intervals")
+    intervals = query_intervals(query)
     if intervals:
-        if isinstance(intervals, str):
-            intervals = [intervals]
         df = df.filter(intervals_predicate(intervals, F.col(TIME_COLUMN)))
         # Tables whose Parquet time column is raw int64 nanos carry a
         # RAW_TIME_NS shadow (catalog.py): the __time predicate above is
@@ -152,6 +166,94 @@ def filtered_frame(df: DataFrame, query: dict, engine=None) -> DataFrame:
     if pred is not None:
         df = df.filter(pred)
     return df
+
+
+def dimension_columns(base: DataFrame, dimensions: list) -> tuple[DataFrame, list, list[str]]:
+    """(base, grouping columns, output names) for DimensionSpecs.
+
+    Multi-value string dimensions (public Druid 0.12 semantics, SURVEY
+    §1.1/§7.5.7): a row with an array-valued dimension groups once per
+    element — the filter has already run with any-element semantics, so
+    explode only for the grouping. listFiltered element-filters into a
+    TEMP column (never the source — aggregators over the same multi-value
+    dimension must still see the row's real values) and behaves as the
+    rewritten delegate; the temp column is array-typed too."""
+    if not dimensions:
+        return base, [], []
+    array_dims = {f.name for f in base.schema.fields if f.dataType.typeName() == "array"}
+    cols, names = [], []
+    for i, spec in enumerate(dimensions):
+        if unwrap_list_filtered(spec) is not None:
+            tmp = f"__lf_{i}"
+            base, spec = rewrite_list_filtered(spec, base, array_dims, tmp)
+            array_dims = array_dims | {tmp}
+        col, name = dimension_column(spec)
+        raw = spec if isinstance(spec, str) else spec.get("dimension")
+        if raw in array_dims:
+            base = base.withColumn(raw, F.explode_outer(F.col(raw)))
+        cols.append(col.alias(name))
+        names.append(name)
+    return base, cols, names
+
+
+class Aggregation:
+    """The aggregation pipeline timeseries, topN and groupBy share —
+    timeseries is groupBy with no dimensions and topN is groupBy on one
+    dimension plus order and limit (query/query-module-overview.md:51-53).
+
+    Construction resolves the dataSource, applies virtualColumns,
+    intervals and filter, builds the grouping keys (time bucket, then
+    the dimensions) and compiles the aggregators; :meth:`frame` runs the
+    aggregation. The planners keep only what differs: timeseries' one-row
+    global aggregate and zero-fill spine, topN's ranking, groupBy's
+    subtotalsSpec, having and limitSpec."""
+
+    def __init__(self, engine, query: dict, dimensions: list = ()):
+        self.context = query.get("context") or {}
+        self.gran = parse_granularity(query.get("granularity", "all"))
+        df = engine.resolve_datasource(query["dataSource"])
+        self.base, dim_cols, self.dim_names = dimension_columns(
+            filtered_frame(df, query, engine=engine), dimensions
+        )
+        if self.gran.kind == "all":
+            # Druid keys the single 'all' bucket by the earliest interval start.
+            start = min((parse_interval(iv)[0] for iv in query_intervals(query)), default=None)
+            bucket = F.lit(start).cast("timestamp")
+        else:
+            bucket = self.gran.bucket(F.col(TIME_COLUMN))
+        self.keys = [bucket.alias(BUCKET), *dim_cols]
+        self.key_names = [BUCKET, *self.dim_names]
+
+        # thetaSketch aggregators + set-op post-aggs plan as a separate
+        # two-level aggregation joined back on the keys (functions/theta.py);
+        # the remaining aggregators take the normal single-pass path. The
+        # main frame owns the complete group set the theta estimates
+        # left-join onto; keep one cheap count when theta is alone.
+        self.theta = split_query(query)
+        specs, self._placeholders = self.theta.other_aggs, []
+        if self.theta.sketches and not specs:
+            specs = [{"type": "count", "name": "__theta_rows"}]
+            self._placeholders = ["__theta_rows"]
+        self.aggs = compile_aggregators(specs, self.context, df=self.base)
+
+    def frame(self, group=grouped_agg, fill=None) -> DataFrame:
+        """Aggregate with ``group(base, keys, key_names, aggs)``, join the
+        theta estimates, let ``fill(frame, fills)`` add absent groups
+        (``fills`` maps each aggregator to its identity), then compute the
+        post-aggregators."""
+        out = group(self.base, self.keys, self.key_names, self.aggs)
+        fills = self.aggs.fills
+        if self.theta.sketches:
+            out, theta_fills = attach_theta(
+                out, self.base, self.keys, self.key_names, self.theta, context=self.context
+            )
+            fills = {**fills, **theta_fills}
+        if fill is not None:
+            out = fill(out, fills)
+        out = out.drop(*self._placeholders)
+        for name, col in compile_post_aggregators(self.theta.other_posts):
+            out = out.withColumn(name, col)
+        return out.drop(*self.theta.hoisted)
 
 
 # Above this many spine buckets the zero-fill join drops its forced

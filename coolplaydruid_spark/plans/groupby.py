@@ -6,8 +6,10 @@ query/query-internal-procedure.md:128-142. Having/limitSpec/nested-query
 dataSource are public Druid v0.12 semantics. Guidance at
 query/query-module-overview.md:52: groupBy is the most flexible, least
 efficient query — timeseries ≡ groupBy with no dimensions and topN ≡
-groupBy on one dim + order + limit are exact identities our tests assert
-(SURVEY §5.1).
+groupBy on one dim + order + limit are exact identities (SURVEY §5.1).
+They hold by construction: all three planners run the one aggregation
+core in plans/common.py (Aggregation) and add only their own steps, and
+the tests still assert both.
 
 Plan shape: one shuffle keyed by (bucket, *dims) with map-side partial
 aggregation; having → post-agg filter; limitSpec → global sort + limit
@@ -17,99 +19,33 @@ scale).
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from coolplaydruid_spark.catalog import TIME_COLUMN
-from coolplaydruid_spark.functions.aggregators import compile_aggregators
-from coolplaydruid_spark.functions.extraction import (
-    dimension_column,
-    rewrite_list_filtered,
-    unwrap_list_filtered,
-)
 from coolplaydruid_spark.functions.filters import compile_filter
-from coolplaydruid_spark.functions.granularity import parse_granularity, parse_interval
-from coolplaydruid_spark.functions.postaggs import compile_post_aggregators
-from coolplaydruid_spark.functions.theta import attach_theta, split_query
-from coolplaydruid_spark.plans.common import BUCKET, filtered_frame, grouped_agg
+from coolplaydruid_spark.plans.common import BUCKET, Aggregation
 
 
 def plan_groupby(engine, query: dict) -> DataFrame:
-    df = engine.resolve_datasource(query["dataSource"])
-    context = query.get("context") or {}
-    gran = parse_granularity(query.get("granularity", "all"))
-    base = filtered_frame(df, query, engine=engine)
-
-    # Multi-value string dimensions (public Druid 0.12 semantics, SURVEY
-    # §1.1/§7.5.7): a row with an array-valued dimension groups once per
-    # element — explode before grouping.
-    array_dims = {
-        f.name for f in base.schema.fields if f.dataType.typeName() == "array"
-    }
-    dim_cols, dim_names = [], []
-    for i, spec in enumerate(query.get("dimensions") or []):
-        if unwrap_list_filtered(spec) is not None:
-            # listFiltered: element-filter into a TEMP column (never the
-            # source — aggregators over the same multi-value dimension
-            # must still see the row's real values) and behave as the
-            # rewritten delegate; the temp column is array-typed too.
-            tmp = f"__lf_{i}"
-            base, spec = rewrite_list_filtered(spec, base, array_dims, tmp)
-            array_dims = array_dims | {tmp}
-        col, name = dimension_column(spec)
-        raw = spec if isinstance(spec, str) else spec.get("dimension")
-        if raw in array_dims:
-            base = base.withColumn(raw, F.explode_outer(F.col(raw)))
-        dim_cols.append(col.alias(name))
-        dim_names.append(name)
-
-    if gran.kind == "all":
-        start = (
-            min(parse_interval(iv)[0] for iv in _intervals(query))
-            if query.get("intervals")
-            else None
-        )
-        bucket = F.lit(start).cast("timestamp").alias(BUCKET)
-    else:
-        bucket = gran.bucket(F.col(TIME_COLUMN)).alias(BUCKET)
-
-    # thetaSketch aggregators plan as a separate two-level aggregation
-    # joined back on (bucket, dims) — functions/theta.py.
-    tsplit = split_query(query)
-    agg_specs, drop_cols = tsplit.other_aggs, []
-    if tsplit.sketches and not agg_specs:
-        agg_specs = [{"type": "count", "name": "__theta_rows"}]
-        drop_cols = ["__theta_rows"]
-
-    aggs = compile_aggregators(agg_specs, context, df=base)
+    core = Aggregation(engine, query, query.get("dimensions") or [])
     subtotals = query.get("subtotalsSpec")
-    if subtotals is not None:
-        if tsplit.sketches:
-            raise ValueError("subtotalsSpec with thetaSketch aggregators is not supported")
-        out = _grouping_sets(base, bucket, dim_cols, dim_names, aggs, subtotals)
+    if subtotals is None:
+        out = core.frame()
+    elif core.theta.sketches:
+        raise ValueError("subtotalsSpec with thetaSketch aggregators is not supported")
     else:
-        out = grouped_agg(base, [bucket, *dim_cols], [BUCKET, *dim_names], aggs)
-        if tsplit.sketches:
-            out, _tf = attach_theta(
-                out, base, [bucket, *dim_cols], [BUCKET, *dim_names], tsplit, context=context
-            )
-
-    out = out.drop(*drop_cols)
-    for name, col in compile_post_aggregators(tsplit.other_posts):
-        out = out.withColumn(name, col)
-    out = out.drop(*tsplit.hoisted)
+        out = core.frame(group=partial(_grouping_sets, subtotals=subtotals))
 
     having = compile_having(query.get("having"))
     if having is not None:
         out = out.filter(having)
 
-    out = apply_limit_spec(out, query.get("limitSpec"), dim_names)
-    return out
+    return apply_limit_spec(out, query.get("limitSpec"), core.dim_names)
 
 
-def _grouping_sets(base, bucket, dim_cols, dim_names, aggs, subtotals):
+def _grouping_sets(base, keys, key_names, aggs, subtotals):
     """``subtotalsSpec`` (public Druid semantics: the result is the
     concatenation of the groupBy at each listed dimension subset, with
     non-included dimensions null) as ONE native grouping-sets
@@ -121,6 +57,7 @@ def _grouping_sets(base, bucket, dim_cols, dim_names, aggs, subtotals):
     reads) and renamed on the way out."""
     if aggs.py_exprs:
         raise ValueError("subtotalsSpec with python-callable aggregators is not supported")
+    bucket, dim_cols, dim_names = keys[0], keys[1:], key_names[1:]
     unknown = [d for s in subtotals for d in s if d not in dim_names]
     if unknown:
         raise ValueError(f"subtotalsSpec names not in dimensions: {unknown!r}")
@@ -228,7 +165,3 @@ def apply_limit_spec(df: DataFrame, spec: dict | None, dim_names: list[str]) -> 
         df = df.limit(int(limit))
     return df
 
-
-def _intervals(query: dict) -> list[str]:
-    intervals = query.get("intervals")
-    return [intervals] if isinstance(intervals, str) else list(intervals or [])

@@ -51,6 +51,7 @@ from coolplaydruid_spark.plans.common import (
     bucket_spine,
     filtered_frame,
     grouped_agg,
+    query_intervals,
 )
 
 _AVERAGER_FNS = {
@@ -88,13 +89,11 @@ def plan_moving_average(engine, query: dict) -> DataFrame:
             "movingAverage requires a bucketing granularity",
             error_class="IllegalArgumentException",
         )
-    intervals = query.get("intervals")
+    intervals = query_intervals(query)
     if not intervals:
         raise UnknownQueryError(
             "movingAverage requires intervals", error_class="IllegalArgumentException"
         )
-    if isinstance(intervals, str):
-        intervals = [intervals]
     averagers = query.get("averagers") or []
     for av in averagers:
         if av.get("type") not in _AVERAGER_FNS:

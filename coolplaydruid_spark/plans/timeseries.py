@@ -20,93 +20,53 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from coolplaydruid_spark.catalog import TIME_COLUMN
-from coolplaydruid_spark.functions.aggregators import compile_aggregators
-from coolplaydruid_spark.functions.granularity import parse_granularity, parse_interval
 from coolplaydruid_spark.functions.postaggs import compile_post_aggregators
-from coolplaydruid_spark.functions.theta import attach_theta, split_query
 from coolplaydruid_spark.plans.common import (
     BUCKET,
+    Aggregation,
     bucket_spine,
-    filtered_frame,
     grouped_agg,
+    query_intervals,
     zero_fill,
 )
 
 
-def plan_timeseries(engine, query: dict) -> DataFrame:
-    df = engine.resolve_datasource(query["dataSource"])
-    context = query.get("context") or {}
-    gran = parse_granularity(query.get("granularity", "all"))
-    base = filtered_frame(df, query, engine=engine)
+def _global_agg(base: DataFrame, aggs) -> DataFrame:
+    """One row aggregating the whole frame. A global .agg() keeps Druid's
+    one-row-even-when-empty semantics; pandas UDAFs need a groupBy, and
+    their constant key changes empty-input behavior (0 rows instead of
+    one identity row) — accepted for the python-agg path only."""
+    if aggs.py_exprs:
+        return grouped_agg(
+            base.withColumn("__g", F.lit(1)), [F.col("__g")], ["__g"], aggs
+        ).drop("__g")
+    return base.agg(*aggs.exprs)
 
-    # thetaSketch aggregators + set-op post-aggs plan as a separate
-    # two-level aggregation joined back on the bucket (functions/theta.py);
-    # the remaining aggregators take the normal single-pass path.
-    tsplit = split_query(query)
-    agg_specs, drop_cols = tsplit.other_aggs, []
-    if tsplit.sketches and not agg_specs:
-        # The main frame owns the complete group set the theta estimates
-        # left-join onto; keep one cheap count when theta is alone.
-        agg_specs = [{"type": "count", "name": "__theta_rows"}]
-        drop_cols = ["__theta_rows"]
-    if tsplit.sketches and context.get("grandTotal"):
+
+def _one_row(base, keys, key_names, aggs) -> DataFrame:
+    """Granularity 'all': the single bucket is the global aggregate keyed
+    by the interval start — one row even when no row matched."""
+    return _global_agg(base, aggs).select(keys[0], *[F.col(n) for n in aggs.names])
+
+
+def plan_timeseries(engine, query: dict) -> DataFrame:
+    core = Aggregation(engine, query)
+    context, gran = core.context, core.gran
+    if core.theta.sketches and context.get("grandTotal"):
         raise ValueError("context.grandTotal with thetaSketch aggregators is not supported")
 
-    aggs = compile_aggregators(agg_specs, context, df=base)
     if gran.kind == "all":
-        # Single bucket keyed by the earliest interval start (Druid keys
-        # the 'all' bucket by interval start).
-        start = min(parse_interval(iv)[0] for iv in _intervals(query)) if query.get(
-            "intervals"
-        ) else None
-        bucket = F.lit(start).cast("timestamp") if start else F.lit(None).cast("timestamp")
-        if aggs.py_exprs:
-            # pandas UDAFs need a groupBy; the constant key changes empty-
-            # input behavior (0 rows instead of one identity row) — accepted
-            # for the python-agg path only.
-            agg_df = grouped_agg(
-                base.withColumn("__g", F.lit(1)), [F.col("__g")], ["__g"], aggs
-            ).drop("__g")
-        else:
-            # global .agg() keeps Druid's one-row-even-when-empty semantics
-            agg_df = base.agg(*aggs.exprs)
-        agg_df = agg_df.select(bucket.alias(BUCKET), *[F.col(n) for n in aggs.names])
-        if tsplit.sketches:
-            agg_df, _tf = attach_theta(
-                agg_df, base, [bucket.alias(BUCKET)], [BUCKET], tsplit,
-                context=context,
-            )
-    elif gran.kind == "none":
-        agg_df = grouped_agg(
-            base, [F.col(TIME_COLUMN).alias(BUCKET)], [BUCKET], aggs
-        )
-        if tsplit.sketches:
-            agg_df, _tf = attach_theta(
-                agg_df, base, [F.col(TIME_COLUMN).alias(BUCKET)], [BUCKET], tsplit,
-                context=context,
-            )
+        agg_df = core.frame(group=_one_row)
+    elif gran.kind == "none" or context.get("skipEmptyBuckets") or not query.get("intervals"):
+        agg_df = core.frame()
     else:
-        bucket_col = gran.bucket(F.col(TIME_COLUMN)).alias(BUCKET)
-        agg_df = grouped_agg(base, [bucket_col], [BUCKET], aggs)
-        fills = aggs.fills
-        if tsplit.sketches:
-            agg_df, theta_fills = attach_theta(
-                agg_df, base, [bucket_col], [BUCKET], tsplit, context=context
-            )
-            fills = {**fills, **theta_fills}
-        skip_empty = bool(context.get("skipEmptyBuckets"))
-        if not skip_empty and query.get("intervals"):
-            spine, n_buckets = bucket_spine(
-                engine.spark, gran, _intervals(query),
-                max_buckets=context.get("maxZeroFillBuckets"),
-            )
-            agg_df = zero_fill(agg_df, spine, fills, spine_rows=n_buckets)
-
-    agg_df = agg_df.drop(*drop_cols)
-    for name, col in compile_post_aggregators(tsplit.other_posts):
-        agg_df = agg_df.withColumn(name, col)
-    agg_df = agg_df.drop(*tsplit.hoisted)
+        spine, n_buckets = bucket_spine(
+            engine.spark, gran, query_intervals(query),
+            max_buckets=context.get("maxZeroFillBuckets"),
+        )
+        agg_df = core.frame(
+            fill=lambda df, fills: zero_fill(df, spine, fills, spine_rows=n_buckets)
+        )
 
     order = F.col(BUCKET).desc() if query.get("descending") else F.col(BUCKET).asc()
     out = agg_df.orderBy(order)
@@ -118,17 +78,9 @@ def plan_timeseries(engine, query: dict) -> DataFrame:
         # filtered base (not the bucket rows) keeps non-additive
         # aggregators (min/max/first/last/cardinality) exact; post-aggs
         # then evaluate on the total row like any other.
-        if aggs.py_exprs:
-            # pandas UDAFs need a groupBy — same constant-key trick as
-            # the granularity-'all' path above.
-            total = grouped_agg(
-                base.withColumn("__g", F.lit(1)), [F.col("__g")], ["__g"], aggs
-            ).drop("__g")
-        else:
-            total = base.agg(*aggs.exprs)
-        total = total.select(
+        total = _global_agg(core.base, core.aggs).select(
             F.lit(None).cast("timestamp").alias(BUCKET),
-            *[F.col(n) for n in aggs.names],
+            *[F.col(n) for n in core.aggs.names],
         )
         for name, col in compile_post_aggregators(query.get("postAggregations")):
             total = total.withColumn(name, col)
@@ -142,7 +94,3 @@ def plan_timeseries(engine, query: dict) -> DataFrame:
         )
     return out
 
-
-def _intervals(query: dict) -> list[str]:
-    intervals = query.get("intervals")
-    return [intervals] if isinstance(intervals, str) else list(intervals or [])

@@ -19,76 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from coolplaydruid_spark.catalog import TIME_COLUMN
-from coolplaydruid_spark.functions.aggregators import compile_aggregators
-from coolplaydruid_spark.functions.extraction import (
-    dimension_column,
-    rewrite_list_filtered,
-    unwrap_list_filtered,
-)
-from coolplaydruid_spark.functions.granularity import parse_granularity, parse_interval
-from coolplaydruid_spark.functions.postaggs import compile_post_aggregators
-from coolplaydruid_spark.functions.theta import attach_theta, split_query
-from coolplaydruid_spark.plans.common import BUCKET, filtered_frame, grouped_agg
+from coolplaydruid_spark.plans.common import BUCKET, Aggregation
 
 
 def plan_topn(engine, query: dict) -> DataFrame:
-    df = engine.resolve_datasource(query["dataSource"])
-    context = query.get("context") or {}
-    gran = parse_granularity(query.get("granularity", "all"))
-    base = filtered_frame(df, query, engine=engine)
-
-    dim_spec = query["dimension"]
-    array_dims = {f.name for f in base.schema.fields if f.dataType.typeName() == "array"}
-    if unwrap_list_filtered(dim_spec) is not None:
-        # listFiltered: element-filter into a TEMP column (never the
-        # source — aggregators over the same multi-value dimension must
-        # still see the row's real values) and behave as the rewritten
-        # delegate; validates the delegate is array-typed (same
-        # ValueError as groupBy).
-        base, dim_spec = rewrite_list_filtered(dim_spec, base, array_dims, "__lf_0")
-        array_dims = array_dims | {"__lf_0"}
-        query = dict(query, dimension=dim_spec)
-    dim_col, dim_name = dimension_column(dim_spec)
+    # thetaSketch aggregators are legal in topN (e.g. rank dimensions by
+    # distinct-user overlap); the core joins them back on (bucket, dim).
+    core = Aggregation(engine, query, [query["dimension"]])
+    dim_name = core.dim_names[0]
     threshold = int(query["threshold"])
-
-    # Multi-value string dimension: one group per element, same core 0.12
-    # semantics as groupBy (the filter has already run with any-element
-    # semantics — explode only for the grouping).
-    raw_dim = dim_spec if isinstance(dim_spec, str) else dim_spec.get("dimension")
-    if raw_dim in array_dims:
-        base = base.withColumn(raw_dim, F.explode_outer(F.col(raw_dim)))
-
-    if gran.kind == "all":
-        start = (
-            min(parse_interval(iv)[0] for iv in _intervals(query))
-            if query.get("intervals")
-            else None
-        )
-        bucket = F.lit(start).cast("timestamp").alias(BUCKET)
-    else:
-        bucket = gran.bucket(F.col(TIME_COLUMN)).alias(BUCKET)
-
-    # thetaSketch aggregators (legal in topN — e.g. rank dimensions by
-    # distinct-user overlap) plan as the same separate two-level
-    # aggregation as timeseries/groupBy, joined back on (bucket, dim).
-    tsplit = split_query(query)
-    agg_specs, drop_cols = tsplit.other_aggs, []
-    if tsplit.sketches and not agg_specs:
-        agg_specs = [{"type": "count", "name": "__theta_rows"}]
-        drop_cols = ["__theta_rows"]
-
-    aggs = compile_aggregators(agg_specs, context, df=base)
-    out = grouped_agg(base, [bucket, dim_col.alias(dim_name)], [BUCKET, dim_name], aggs)
-    if tsplit.sketches:
-        out, _tf = attach_theta(
-            out, base, [bucket, dim_col.alias(dim_name)], [BUCKET, dim_name], tsplit,
-            context=context,
-        )
-    out = out.drop(*drop_cols)
-    for name, col in compile_post_aggregators(tsplit.other_posts):
-        out = out.withColumn(name, col)
-    out = out.drop(*tsplit.hoisted)
+    out = core.frame()
 
     metric = query.get("metric")
     ps = _previous_stop(metric)
@@ -133,7 +73,7 @@ def plan_topn(engine, query: dict) -> DataFrame:
             c, s = F.col(dim_name).cast("string"), F.lit(str(stop))
             out = out.where(c < s if inv else c > s)
     order = _metric_order(metric, dim_name, inverted=False)
-    if gran.kind == "all":
+    if core.gran.kind == "all":
         # Single bucket: the bucket column is a constant, so a
         # partitionBy(BUCKET) window would constant-fold to a global
         # (single-partition) sort. orderBy+limit instead plans as
@@ -212,7 +152,3 @@ def _previous_stop(metric, inverted: bool = False):
         return stop, metric.get("ordering", "lexicographic"), inverted
     return None
 
-
-def _intervals(query: dict) -> list[str]:
-    intervals = query.get("intervals")
-    return [intervals] if isinstance(intervals, str) else list(intervals or [])

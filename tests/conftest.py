@@ -12,6 +12,25 @@ from coolplaydruid_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+# Aggregator inputs for the timeseries/topN ≡ groupBy identity tests, one
+# per path of the shared aggregation core: a thetaSketch alone (placeholder
+# count) with an arithmetic post-agg over its estimate (hoisted), and a
+# filtered aggregator.
+THETA_USERS = {"type": "thetaSketch", "name": "users", "fieldName": "user_id"}
+USERS_X2 = {
+    "type": "arithmetic", "name": "users_x2", "fn": "*",
+    "fields": [
+        {"type": "thetaSketchEstimate", "field": {"type": "fieldAccess", "fieldName": "users"}},
+        {"type": "constant", "value": 2},
+    ],
+}
+FILTERED_BIG = {
+    "type": "filtered", "name": "big",
+    "filter": {"type": "bound", "dimension": "value", "lower": "100", "ordering": "numeric"},
+    "aggregator": {"type": "doubleSum", "name": "big", "fieldName": "value"},
+}
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark(app_name="coolplaydruid_tests", master="local[4]", shuffle_partitions=4)

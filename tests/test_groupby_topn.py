@@ -2,7 +2,9 @@
 groupBy+order+limit identity (query-module-overview.md:53), nested query
 dataSources and union dataSources."""
 
-from tests.conftest import assert_df_matches_duck
+import pytest
+
+from tests.conftest import FILTERED_BIG, THETA_USERS, USERS_X2, assert_df_matches_duck
 
 INTERVAL = ["2024-01-01T00:00:00/2024-02-01T00:00:00"]
 
@@ -55,35 +57,59 @@ def test_groupby_having_limit(engine, duck):
     assert_df_matches_duck(df, duck, sql)
 
 
-def test_topn_equals_groupby_order_limit(engine):
-    """Metamorphic identity (query-module-overview.md:53)."""
-    aggs = [{"type": "doubleSum", "name": "total", "fieldName": "value"}]
-    topn = {
-        "queryType": "topN",
+# A multi-value dimension on events: each row is its event_type and its
+# size class. Multi-value and listFiltered dimensions explode before grouping.
+KINDS = [{
+    "type": "expression", "name": "kinds", "dialect": "sql",
+    "expression": "array(event_type, CASE WHEN value >= 100 THEN 'big' ELSE 'small' END)",
+}]
+TOTAL = [{"type": "doubleSum", "name": "total", "fieldName": "value"}]
+
+
+@pytest.mark.parametrize("dimension,aggs,posts,metric,vcols", [
+    pytest.param("event_type", TOTAL, [], "total", [], id="sum"),
+    pytest.param("event_type", [THETA_USERS], [USERS_X2], "users_x2", [], id="theta_hoisted"),
+    pytest.param("event_type", [FILTERED_BIG, *TOTAL], [], "big", [], id="filtered"),
+    pytest.param("kinds", TOTAL, [], "total", KINDS, id="multi_value"),
+    pytest.param(
+        {"type": "listFiltered", "values": ["click", "view", "big"],
+         "delegate": {"type": "default", "dimension": "kinds", "outputName": "kind"}},
+        TOTAL, [], "total", KINDS, id="list_filtered",
+    ),
+])
+def test_topn_equals_groupby_order_limit(engine, dimension, aggs, posts, metric, vcols):
+    """Metamorphic identity (query-module-overview.md:53). The groupBy
+    limitSpec breaks metric ties by dimension, as topN does."""
+    name = dimension if isinstance(dimension, str) else dimension["delegate"]["outputName"]
+    common = {
         "dataSource": "events",
         "granularity": "all",
-        "dimension": "event_type",
-        "metric": "total",
-        "threshold": 3,
+        "virtualColumns": vcols,
         "aggregations": aggs,
+        "postAggregations": posts,
         "intervals": INTERVAL,
     }
-    gb = {
-        "queryType": "groupBy",
-        "dataSource": "events",
-        "granularity": "all",
-        "dimensions": ["event_type"],
-        "aggregations": aggs,
-        "limitSpec": {
+    topn = dict(common, queryType="topN", dimension=dimension, metric=metric, threshold=3)
+    gb = dict(
+        common,
+        queryType="groupBy",
+        dimensions=[dimension],
+        limitSpec={
             "type": "default",
-            "columns": [{"dimension": "total", "direction": "descending"}],
+            "columns": [{"dimension": metric, "direction": "descending"}, name],
             "limit": 3,
         },
-        "intervals": INTERVAL,
-    }
-    t = [(r["event_type"], round(r["total"], 6)) for r in engine.plan(topn).collect()]
-    g = [(r["event_type"], round(r["total"], 6)) for r in engine.plan(gb).collect()]
-    assert t == g
+    )
+
+    def rows(q):
+        return [
+            {k: round(v, 6) if isinstance(v, float) else v for k, v in r.asDict().items()}
+            for r in engine.plan(q).collect()
+        ]
+
+    t = rows(topn)
+    assert t == rows(gb)
+    assert len(t) == 3
 
 
 def test_topn_per_bucket(engine, duck):

@@ -3,7 +3,9 @@
 
 from datetime import datetime
 
-from tests.conftest import assert_df_matches_duck
+import pytest
+
+from tests.conftest import FILTERED_BIG, THETA_USERS, USERS_X2, assert_df_matches_duck
 
 # The Timeseries example query from query/query-timeseries.md:8-41,
 # translated onto the events fixture (FIXTURES.md golden case 1).
@@ -166,24 +168,32 @@ def test_period_timezone_zero_fill_alignment(engine):
     assert nonzero, "zero-fill dropped every real aggregate bucket"
 
 
-def test_timeseries_equals_groupby_no_dims(engine):
+@pytest.mark.parametrize("aggs,posts", [
+    pytest.param(EXAMPLE["aggregations"], EXAMPLE["postAggregations"], id="example"),
+    pytest.param([THETA_USERS], [USERS_X2], id="theta_hoisted"),
+    pytest.param([FILTERED_BIG, {"type": "count", "name": "rows"}], [], id="filtered"),
+])
+def test_timeseries_equals_groupby_no_dims(engine, aggs, posts):
     """Metamorphic identity (query-module-overview.md:51-52): timeseries ≡
     groupBy with zero dimensions."""
-    ts_rows = engine.execute(dict(EXAMPLE, context={"skipEmptyBuckets": True}))
+    ts_rows = engine.execute(dict(
+        EXAMPLE, aggregations=aggs, postAggregations=posts,
+        context={"skipEmptyBuckets": True},
+    ))
     gb = {
         "queryType": "groupBy",
         "dataSource": "events",
         "granularity": "day",
         "dimensions": [],
         "filter": EXAMPLE["filter"],
-        "aggregations": EXAMPLE["aggregations"],
-        "postAggregations": EXAMPLE["postAggregations"],
+        "aggregations": aggs,
+        "postAggregations": posts,
         "intervals": EXAMPLE["intervals"],
     }
     gb_rows = engine.execute(gb)
     ts_map = {r["timestamp"]: r["result"] for r in ts_rows}
     gb_map = {r["timestamp"]: r["event"] for r in gb_rows}
-    assert ts_map == gb_map
+    assert ts_map and ts_map == gb_map
 
 
 def test_degenerate_interval_returns_empty(engine):
