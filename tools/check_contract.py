@@ -40,6 +40,14 @@ def norm_cell(v):
     return v
 
 
+def matching(queries: dict, name_filters: list[str] | None) -> dict:
+    """The entries whose name contains any of the substrings (all when
+    there are none)."""
+    if not name_filters:
+        return queries
+    return {n: f for n, f in queries.items() if any(s in n for s in name_filters)}
+
+
 def run(sf_dir: str, name_filters: list[str] | None = None) -> int:
     spark = get_spark(app_name="contract_check")
     con = duckdb.connect()
@@ -50,14 +58,11 @@ def run(sf_dir: str, name_filters: list[str] | None = None) -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    queries = entry_mod.queries()
+    queries = matching(entry_mod.queries(), name_filters)
     oracles = entry_mod.oracle_sql()
-    if name_filters:
-        queries = {n: f for n, f in queries.items()
-                   if any(s in n for s in name_filters)}
-        if not queries:
-            print(f"no queries match filters {name_filters!r}", file=sys.stderr)
-            return 2
+    if not queries:
+        print(f"no queries match filters {name_filters!r}", file=sys.stderr)
+        return 2
     # Warm the JVM *and* the engine path before timing (r6/r7 artifacts
     # charged several seconds of first-use setup — UDF registration,
     # catalog init, zero-fill planner — to the first query, making its
