@@ -380,26 +380,28 @@ class DruidEngine:
         at a time, so an unbounded scan is O(partition) driver memory, not
         O(table). Aggregation query types are bucket-bounded and fall back
         to execute(). Cancellation still works via the query-id job group.
+        The query is planned before the iterator is returned, so a spec or
+        analysis error raises here, not from the first ``next()``.
         """
         if isinstance(query, str):
             try:
                 query = json.loads(query)
             except json.JSONDecodeError as e:
                 raise UnknownQueryError(str(e), error_class="JsonParseException") from e
-        qtype = query.get("queryType")
-        if qtype not in ("scan", "select", "search", "segmentMetadata"):
-            yield from self.execute(query)
-            return
+        if query.get("queryType") not in ("scan", "select", "search", "segmentMetadata"):
+            return iter(self.execute(query))
+        return self._stream(query, self.plan(query))
+
+    def _stream(self, query: dict, df):
         context = query.get("context") or {}
         query_id = context.get("queryId") or str(uuid.uuid4())
         sc = self.spark.sparkContext
         sc.setJobGroup(query_id, f"druid query {query_id} (streamed)",
                        interruptOnCancel=True)
         try:
-            df = self.plan(query)
             for row in df.toLocalIterator(prefetchPartitions=True):
                 r = row.asDict(recursive=True)
-                if qtype == "select":
+                if query.get("queryType") == "select":
                     # The select envelope (pagingIdentifiers) is a batch
                     # concept; the streamed form delivers plain rows like
                     # scan (select's successor) does.
@@ -436,11 +438,13 @@ class DruidEngine:
     def etag(self, query: dict) -> str | None:
         """ETag for If-None-Match caching and the result-cache key
         (query/query-internal-procedure.md:41-47): hash of the canonical
-        rollup-routed query and the catalog version of the table it reads
-        (Druid's per-segment-version cache key); no filesystem access.
-        FRESHNESS CONTRACT: ETag and answer change together, exactly on
-        (re)registration — ``register_ingested`` publishes an append.
-        None unless the dataSource is a registered path-backed table."""
+        rollup-routed query, the catalog version of the table it reads
+        (Druid's per-segment-version cache key) and the lookup registry's
+        version (registered lookups resolve at plan time); no filesystem
+        access. FRESHNESS CONTRACT: ETag and answer change together,
+        exactly on (re)registration of the table or of a lookup —
+        ``register_ingested`` publishes an append. None unless the
+        dataSource is a registered path-backed table."""
         if self._rollups and (query.get("context") or {}).get("useRollup", True):
             query = rewrite_with_rollup(self._rollups, query)
         ds = query.get("dataSource")
@@ -451,7 +455,8 @@ class DruidEngine:
             return None
         context = {k: v for k, v in (query.get("context") or {}).items()
                    if k not in _ANSWER_FREE_CONTEXT}
-        canonical = [dict(query, context=context), ds, snap.version]
+        canonical = [dict(query, context=context), ds, snap.version,
+                     self.catalog.lookup_version]
         h = hashlib.md5(json.dumps(canonical, sort_keys=True, default=str).encode())
         return f'"{h.hexdigest()}"'
 

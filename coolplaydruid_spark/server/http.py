@@ -216,10 +216,10 @@ def make_handler(engine: DruidEngine):
                     return
                 try:
                     if query.get("queryType") in ("scan", "select"):
-                        # Row-returning queries stream chunked. Plan once
-                        # up front so spec/analysis errors still return
-                        # the 500 envelope instead of a broken stream.
-                        engine.plan(query)
+                        # Row-returning queries stream chunked. The stream
+                        # is planned before it is returned, so spec and
+                        # analysis errors still get the 500 envelope
+                        # instead of a broken stream.
                         entries = engine.execute_stream(query)
                         self._send_stream(entries, {"ETag": etag} if etag else None)
                         return

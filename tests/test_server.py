@@ -196,6 +196,23 @@ def test_http_scan_bad_spec_still_enveloped(server):
     assert "error" in json.loads(body)
 
 
+def test_http_scan_plans_once(server, engine, monkeypatch):
+    """One HTTP scan plans the query once: execute_stream plans before it
+    returns, so the handler needs no separate plan for error envelopes."""
+    calls = []
+    plan = engine.plan
+    monkeypatch.setattr(engine, "plan", lambda q: calls.append(q) or plan(q))
+    q = {
+        "queryType": "scan",
+        "dataSource": "events",
+        "columns": ["event_id"],
+        "intervals": ["2024-01-01T00:00:00/2024-01-02T00:00:00"],
+    }
+    status, _, body = _req(server, "POST", "/druid/v2", q)
+    assert status == 200 and json.loads(body)
+    assert len(calls) == 1
+
+
 def _count_query(name, **context):
     return {
         "queryType": "timeseries",
@@ -537,3 +554,35 @@ def test_datasource_introspection_endpoints(server):
 
     status, _h, _b = _req(server, "GET", "/druid/v2/datasources/nope")
     assert status == 404
+
+
+def test_reregistered_lookup_is_never_served_stale(engine):
+    """registeredLookup extractionFns resolve at plan time, so the ETag
+    (the result-cache key) covers the lookup registry: re-registering a
+    lookup changes the ETag and the next answer uses the new mapping."""
+    q = {
+        "queryType": "groupBy",
+        "dataSource": "customer",
+        "granularity": "all",
+        "dimensions": [{
+            "type": "extraction", "dimension": "c_mktsegment", "outputName": "kind",
+            "extractionFn": {"type": "registeredLookup", "lookup": "segment_kinds",
+                             "replaceMissingValueWith": "other"},
+        }],
+        "aggregations": [{"type": "count", "name": "n"}],
+    }
+
+    def kinds():
+        return {r["event"]["kind"]: r["event"]["n"] for r in engine.execute(q)}
+
+    engine.catalog.register_lookup("segment_kinds", {"FURNITURE": "home", "HOUSEHOLD": "home"})
+    tag = engine.etag(q)
+    first = kinds()
+    assert set(first) == {"home", "other"}
+    assert kinds() == first and engine.metrics()[-1]["cacheHit"]
+
+    engine.catalog.register_lookup("segment_kinds", {"MACHINERY": "industry"})
+    second = kinds()
+    assert set(second) == {"industry", "other"}
+    assert sum(second.values()) == sum(first.values())
+    assert engine.etag(q) != tag
