@@ -393,15 +393,15 @@ class DruidEngine:
         return self._stream(query, self.plan(query))
 
     def _stream(self, query: dict, df):
-        context = query.get("context") or {}
-        query_id = context.get("queryId") or str(uuid.uuid4())
+        select = query.get("queryType") == "select"
+        query_id = (query.get("context") or {}).get("queryId") or str(uuid.uuid4())
         sc = self.spark.sparkContext
         sc.setJobGroup(query_id, f"druid query {query_id} (streamed)",
                        interruptOnCancel=True)
         try:
             for row in df.toLocalIterator(prefetchPartitions=True):
                 r = row.asDict(recursive=True)
-                if query.get("queryType") == "select":
+                if select:
                     # The select envelope (pagingIdentifiers) is a batch
                     # concept; the streamed form delivers plain rows like
                     # scan (select's successor) does.
