@@ -18,6 +18,7 @@ cancel, timeout, and the JSON error envelope.
 
 from __future__ import annotations
 
+import copy
 import hashlib
 import json
 import threading
@@ -58,6 +59,36 @@ from coolplaydruid_spark.plans.topn import plan_topn
 _ANSWER_FREE_CONTEXT = {"queryId", "timeout", "priority", "useCache", "populateCache"}
 
 
+def _parse_query(query: dict | str) -> dict:
+    """A query spec from its JSON text; a dict passes through."""
+    if not isinstance(query, str):
+        return query
+    try:
+        return json.loads(query)
+    except json.JSONDecodeError as e:
+        raise UnknownQueryError(str(e), error_class="JsonParseException") from e
+
+
+class _Result:
+    """One answer as the result cache holds it: the Druid-shaped rows and
+    their JSON encoding, made on first use and kept, so a cache hit over
+    HTTP writes stored bytes instead of re-encoding the rows."""
+
+    __slots__ = ("rows", "_body")
+
+    def __init__(self, rows: list[dict[str, Any]]):
+        self.rows = rows
+        self._body: bytes | None = None
+
+    @property
+    def body(self) -> bytes:
+        # Two threads may encode the same rows at once; both get equal
+        # bytes and either may be kept, so no lock is needed.
+        if self._body is None:
+            self._body = json.dumps(self.rows, default=str).encode()
+        return self._body
+
+
 def _iso(v):
     """Result timestamps in Druid's ISO-8601 Z form."""
     return v.isoformat() + "Z" if hasattr(v, "isoformat") else v
@@ -68,11 +99,11 @@ class DruidEngine:
                  result_cache_entries: int = 1024, metrics_entries: int = 1024):
         self.spark = spark
         self.catalog = catalog or Catalog(spark)
-        # ETag-keyed result cache (see execute()); plain FIFO bound —
+        # ETag-keyed result cache (see _result()); plain FIFO bound —
         # entries are invalidated by key churn, not eviction policy. One
         # lock guards lookup, eviction and insert: HTTP handler threads
         # share it.
-        self._result_cache: dict[str, list] = {}
+        self._result_cache: dict[str, _Result] = {}
         self._result_cache_max = result_cache_entries
         self._result_cache_lock = threading.Lock()
         self._rollups: list[RollupSpec] = []
@@ -255,35 +286,50 @@ class DruidEngine:
         """Run a query and return Druid-shaped result rows. Applies
         ``context.timeout`` (ms) via job-group cancellation and maps any
         failure to the Druid error envelope."""
-        if isinstance(query, str):
-            try:
-                query = json.loads(query)
-            except json.JSONDecodeError as e:
-                raise UnknownQueryError(str(e), error_class="JsonParseException") from e
+        query = _parse_query(query)
+        key = self._cache_key(query)
+        rows = self._result(query, key).rows
+        # A cached entry is shared with every later hit: hand out a copy,
+        # so a caller editing its rows cannot change the next answer.
+        return copy.deepcopy(rows) if key else rows
+
+    def _cache_key(self, query: dict) -> str | None:
+        """The result-cache key of ``query`` — its ETag — or None when
+        the cache can neither serve nor keep it: scan/select are never
+        cached (Druid likewise only caches per-segment aggregates), and
+        context.useCache / populateCache (both default true in Druid)
+        can switch the cache off."""
+        context = query.get("context") or {}
+        if query.get("queryType") in ("scan", "select") or not (
+            context.get("useCache", True) or context.get("populateCache", True)
+        ):
+            return None
+        return self.etag(query)
+
+    def _result(self, query: dict, key: str | None) -> _Result:
+        """The answer to ``query`` as a result-cache entry: a hit, or a
+        fresh execution that fills the cache. ``key`` is the query's ETag
+        (None bypasses the cache), taken by the caller so that a request
+        hashes its query once; reads honour context.useCache and writes
+        context.populateCache. The entry may be shared with the cache:
+        read it, never mutate it.
+
+        The cache (the reference's caching/ETag machinery,
+        query/query-internal-procedure.md:41-47) is keyed by the ETag —
+        canonical query + the catalog version of the table read — so
+        re-registration mints a new key and stale entries simply stop
+        being referenced; plan() resolves the table after the key is
+        taken, so an entry is never older than its key's version."""
         context = query.get("context") or {}
         query_id = context.get("queryId") or str(uuid.uuid4())
         timeout_ms = context.get("timeout")
         t0 = time.perf_counter()
-        # Result cache (context.useCache / populateCache, both default
-        # true in Druid; the reference's caching/ETag machinery is
-        # query/query-internal-procedure.md:41-47). Keyed by the ETag —
-        # canonical query + the catalog version of the table read — so
-        # re-registration mints a new key and stale entries simply stop
-        # being referenced; plan() resolves the table after the key is
-        # taken, so an entry is never older than its key's version.
-        # Entries hold serialized results (aggregation-sized); scan/select
-        # are never cached (Druid likewise only caches per-segment
-        # aggregates).
-        cacheable = query.get("queryType") not in ("scan", "select")
-        cache_key = None
-        if cacheable and (context.get("useCache", True) or context.get("populateCache", True)):
-            cache_key = self.etag(query)
-        if cache_key and context.get("useCache", True):
+        if key and context.get("useCache", True):
             with self._result_cache_lock:
-                hit = self._result_cache.get(cache_key)
+                hit = self._result_cache.get(key)
             if hit is not None:
                 self._emit_metrics(query, query_id, t0, success=True,
-                                   rows=len(hit), cache_hit=True)
+                                   rows=len(hit.rows), cache_hit=True)
                 return hit
         sc = self.spark.sparkContext
         sc.setJobGroup(query_id, f"druid query {query_id}", interruptOnCancel=True)
@@ -342,14 +388,14 @@ class DruidEngine:
                 # The deadline passed while planning/collecting (the cancel
                 # may have landed between jobs) — the timeout contract wins.
                 raise QueryTimeoutError()
-            result = self.serialize(query, rows)
-            if cache_key and context.get("populateCache", True):
+            entry = _Result(self.serialize(query, rows))
+            if key and context.get("populateCache", True):
                 with self._result_cache_lock:
                     if len(self._result_cache) >= self._result_cache_max:
                         self._result_cache.pop(next(iter(self._result_cache)))
-                    self._result_cache[cache_key] = result
-            self._emit_metrics(query, query_id, t0, success=True, rows=len(result))
-            return result
+                    self._result_cache[key] = entry
+            self._emit_metrics(query, query_id, t0, success=True, rows=len(entry.rows))
+            return entry
         except DruidQueryError as e:
             self._emit_metrics(query, query_id, t0, success=False,
                                error=type(e).__name__)
@@ -383,11 +429,7 @@ class DruidEngine:
         The query is planned before the iterator is returned, so a spec or
         analysis error raises here, not from the first ``next()``.
         """
-        if isinstance(query, str):
-            try:
-                query = json.loads(query)
-            except json.JSONDecodeError as e:
-                raise UnknownQueryError(str(e), error_class="JsonParseException") from e
+        query = _parse_query(query)
         if query.get("queryType") not in ("scan", "select", "search", "segmentMetadata"):
             return iter(self.execute(query))
         return self._stream(query, self.plan(query))
@@ -414,9 +456,11 @@ class DruidEngine:
     def execute_json(self, query: dict | str) -> str:
         """Like execute() but never raises: failures return the JSON error
         envelope exactly as the reference's QueryResource does
-        (query/query-module-overview.md:60-87)."""
+        (query/query-module-overview.md:60-87). A cached answer's JSON is
+        encoded once and served from the cache entry."""
         try:
-            return json.dumps(self.execute(query), default=str)
+            query = _parse_query(query)
+            return self._result(query, self._cache_key(query)).body.decode()
         except Exception as e:
             return json.dumps(envelope_for(e))
 

@@ -213,6 +213,89 @@ def test_http_scan_plans_once(server, engine, monkeypatch):
     assert len(calls) == 1
 
 
+def _counting_server(engine, monkeypatch, writes: list):
+    """A server whose handlers record the size of every socket write."""
+    from coolplaydruid_spark.server import http
+
+    make_handler = http.make_handler
+
+    def counting(engine_):
+        class Handler(make_handler(engine_)):
+            def setup(self):
+                super().setup()
+                write = self.wfile.write
+                self.wfile.write = lambda b: writes.append(len(b)) or write(b)
+
+        return Handler
+
+    monkeypatch.setattr(http, "make_handler", counting)
+    return DruidHttpServer(engine, port=0).start()
+
+
+def test_http_scan_coalesces_stream_writes(engine, monkeypatch):
+    """A streamed full-table scan goes out in ~64 KiB chunks, not one
+    write (and, with Nagle off, one packet) per row."""
+    writes: list = []
+    srv = _counting_server(engine, monkeypatch, writes)
+    try:
+        q = {
+            "queryType": "scan",
+            "dataSource": "events",
+            "columns": ["event_id", "event_type"],
+            "intervals": ["1970-01-01T00:00:00/2100-01-01T00:00:00"],
+        }
+        status, headers, body = _req(srv, "POST", "/druid/v2", q)
+    finally:
+        srv.shutdown()
+    assert status == 200 and headers.get("Transfer-Encoding") == "chunked"
+    rows = json.loads(body)
+    assert len(rows) == engine.catalog.table("events").count()
+    assert len(writes) <= 2 + sum(writes) // (64 * 1024)
+    assert len(writes) * 100 < len(rows)
+
+
+def test_cached_post_keepalive_no_ack_stall(server, engine):
+    """Sequential cached POSTs on one keep-alive connection: each answer
+    arrives without waiting for the client's delayed ACK (~40 ms), and
+    the 200 body is execute_json's answer byte for byte."""
+    import http.client
+    import statistics
+    import time
+
+    q = json.dumps(dict(TS_QUERY, granularity="hour"))
+    conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=120)
+    try:
+        def post():
+            conn.request("POST", "/druid/v2", q, {"Content-Type": "application/json"})
+            resp = conn.getresponse()
+            return resp.status, resp.read()
+
+        post()  # fills the result cache
+        ms = []
+        for _ in range(20):
+            t0 = time.perf_counter()
+            status, body = post()
+            ms.append((time.perf_counter() - t0) * 1000.0)
+            assert status == 200
+    finally:
+        conn.close()
+    assert statistics.median(ms) < 20.0, ms
+    assert body == engine.execute_json(q).encode()
+
+
+def test_cached_http_post_hashes_once(server, engine, monkeypatch):
+    """A cached 200 computes the ETag once: the handler's ETag is also
+    the result-cache key."""
+    _req(server, "POST", "/druid/v2", TS_QUERY)  # fills the result cache
+    calls = []
+    etag = engine.etag
+    monkeypatch.setattr(engine, "etag", lambda q: calls.append(q) or etag(q))
+    status, headers, body = _req(server, "POST", "/druid/v2", TS_QUERY)
+    assert status == 200 and headers.get("ETag") and json.loads(body)
+    assert engine.metrics()[-1]["cacheHit"]
+    assert len(calls) == 1
+
+
 def _count_query(name, **context):
     return {
         "queryType": "timeseries",
@@ -254,6 +337,25 @@ def test_result_cache_hits_and_invalidates(engine, tmp_path):
     assert engine.etag(q) != tag
     assert engine.execute(q)[0]["result"]["n"] == 100
     assert not engine.metrics()[-1]["cacheHit"]
+
+
+def test_execute_rows_do_not_alias_the_cache(engine):
+    """execute() hands out rows the result cache does not share: editing
+    them, after the miss that fills the cache or after a hit, leaves the
+    next hit's answer intact."""
+    import copy
+
+    q = dict(_count_query("events"), granularity="day")
+    first = engine.execute(q)
+    expected = copy.deepcopy(first)
+    first[0]["result"]["n"] = -1
+    hit = engine.execute(q)
+    assert engine.metrics()[-1]["cacheHit"]
+    assert hit == expected
+    hit[0]["result"]["n"] = -2
+    hit.clear()
+    assert engine.execute(q) == expected
+    assert engine.metrics()[-1]["cacheHit"]
 
 
 def test_append_is_published_by_register_ingested_never_stale(spark, tmp_path):
