@@ -148,7 +148,7 @@ def make_handler(engine: DruidEngine):
             buf = bytearray()
 
             def framed() -> bytes:
-                out = f"{len(buf):X}\r\n".encode() + buf + b"\r\n" if buf else b""
+                out = (f"{len(buf):X}\r\n".encode() + buf + b"\r\n") if buf else b""
                 buf.clear()
                 return out
 
@@ -159,9 +159,10 @@ def make_handler(engine: DruidEngine):
 
             if lines:
                 for entry in entries:
-                    add((entry if isinstance(entry, bytes) else json.dumps(
+                    add(entry if isinstance(entry, bytes) else json.dumps(
                         entry, default=str
-                    ).encode()) + b"\n")
+                    ).encode())
+                    add(b"\n")
             else:
                 add(b"[")
                 first = True
@@ -251,9 +252,7 @@ def make_handler(engine: DruidEngine):
                         entries = engine.execute_stream(query)
                         self._send_stream(entries, {"ETag": etag} if etag else None)
                         return
-                    # The ETag taken above is the result-cache key, and a
-                    # cached entry keeps its encoded JSON: a hit costs one
-                    # hash, one dict lookup and the socket writes.
+                    # The ETag above is also the result-cache key.
                     body = engine._result(query, etag).body  # noqa: SLF001
                     self._send(200, body, {"ETag": etag} if etag else None)
                 except Exception as e:  # noqa: BLE001
@@ -382,5 +381,6 @@ class DruidHttpServer:
 
     def shutdown(self) -> None:
         self.httpd.shutdown()
+        self.httpd.server_close()
         if self.thread:
             self.thread.join(timeout=5)

@@ -213,10 +213,12 @@ def test_http_scan_plans_once(server, engine, monkeypatch):
     assert len(calls) == 1
 
 
-def _counting_server(engine, monkeypatch, writes: list):
-    """A server whose handlers record the size of every socket write."""
+def test_http_scan_coalesces_stream_writes(engine, monkeypatch):
+    """A streamed full-table scan goes out in ~64 KiB chunks, not one
+    write (and, with Nagle off, one packet) per row."""
     from coolplaydruid_spark.server import http
 
+    writes: list = []
     make_handler = http.make_handler
 
     def counting(engine_):
@@ -229,14 +231,7 @@ def _counting_server(engine, monkeypatch, writes: list):
         return Handler
 
     monkeypatch.setattr(http, "make_handler", counting)
-    return DruidHttpServer(engine, port=0).start()
-
-
-def test_http_scan_coalesces_stream_writes(engine, monkeypatch):
-    """A streamed full-table scan goes out in ~64 KiB chunks, not one
-    write (and, with Nagle off, one packet) per row."""
-    writes: list = []
-    srv = _counting_server(engine, monkeypatch, writes)
+    srv = DruidHttpServer(engine, port=0).start()
     try:
         q = {
             "queryType": "scan",
