@@ -245,7 +245,7 @@ def test_http_scan_coalesces_stream_writes(engine, monkeypatch):
     assert status == 200 and headers.get("Transfer-Encoding") == "chunked"
     rows = json.loads(body)
     assert len(rows) == engine.catalog.table("events").count()
-    assert len(writes) <= 2 + sum(writes) // (64 * 1024)
+    assert len(writes) <= 2 + sum(writes) // http._CHUNK_BYTES  # noqa: SLF001
     assert len(writes) * 100 < len(rows)
 
 
