@@ -12,8 +12,12 @@ mergeRunners → mergeResults, query/query-01.jpg) disappears into Catalyst:
 partition pruning selects "segments", partial/final HashAggregate is the
 historical→broker merge.
 
-Operational contract (query/query-module-overview.md:55-87): per-query id,
-cancel, timeout, and the JSON error envelope.
+Operational contract (query/query-module-overview.md:55-87): every native
+query runs inside one ``_Lifecycle`` — its id, Spark job group (cancel),
+context.timeout, one metrics row and the mapping to the JSON error
+envelope — whether it is answered from the result cache, collected, or
+streamed. ``streamed()`` is the one place that decides what streams:
+only scan, whose result grows with the table.
 """
 
 from __future__ import annotations
@@ -24,6 +28,7 @@ import json
 import threading
 import time
 import uuid
+from itertools import islice
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,6 +63,11 @@ from coolplaydruid_spark.plans.topn import plan_topn
 # cache.
 _ANSWER_FREE_CONTEXT = {"queryId", "timeout", "priority", "useCache", "populateCache"}
 
+# Druid's scan batchSize default: a compactedList scan answers in batch
+# objects of at most this many rows, and a streamed scan serializes this
+# many rows at a time.
+_SCAN_BATCH_ROWS = 20480
+
 
 def _parse_query(query: dict | str) -> dict:
     """A query spec from its JSON text; a dict passes through."""
@@ -87,6 +97,87 @@ class _Result:
         if self._body is None:
             self._body = json.dumps(self.rows, default=str).encode()
         return self._body
+
+
+def streamed(query: dict) -> bool:
+    """Whether ``query`` is answered as a stream (``execute_stream``,
+    chunked over HTTP) instead of through the result cache: only scan,
+    the one query type whose result grows with the table. The others are
+    bounded — aggregations by their buckets, select by
+    pagingSpec.threshold — so they are collected, cached and sent whole."""
+    return query.get("queryType") == "scan"
+
+
+class _Lifecycle:
+    """One native query from arrival to its metrics row — the reference's
+    QueryLifecycle (query/query-internal-procedure.md:143-189), which the
+    cached and the streamed path both run inside.
+
+    Entering names the query (context.queryId, else a fresh id) and
+    starts its clock. ``start_spark`` is the part only an executed query
+    pays for, so a cache hit makes no py4j call and starts no timer: it
+    puts the query's Spark jobs in a job group named by its id (what
+    ``cancel`` and the deadline act on) and starts the context.timeout
+    (ms) timer. Leaving stops both, records one metrics row, success or
+    failure, and maps a failure to the exception the error envelope is
+    built from: QueryTimeoutError once the deadline has passed, a
+    DruidQueryError as it is, anything else as UnknownQueryError."""
+
+    def __init__(self, engine: "DruidEngine", query: dict):
+        context = query.get("context") or {}
+        self.engine = engine
+        self.query = query
+        self.query_id = context.get("queryId") or str(uuid.uuid4())
+        self.timeout_ms = context.get("timeout")
+        self.rows: int | None = None
+        self.cache_hit = False
+        self.timed_out = threading.Event()
+        self._sc = None
+        self._timer: threading.Timer | None = None
+
+    def __enter__(self) -> "_Lifecycle":
+        self.t0 = time.perf_counter()
+        return self
+
+    def start_spark(self) -> None:
+        sc = self._sc = self.engine.spark.sparkContext
+        sc.setJobGroup(self.query_id, f"druid query {self.query_id}",
+                       interruptOnCancel=True)
+        if self.timeout_ms:
+            def expire():
+                self.timed_out.set()
+                sc.cancelJobGroup(self.query_id)
+
+            self._timer = threading.Timer(self.timeout_ms / 1000.0, expire)
+            self._timer.daemon = True
+            self._timer.start()
+
+    def check_deadline(self) -> None:
+        """Raise once the deadline has passed: its cancel may have landed
+        between two Spark jobs and stopped nothing."""
+        if self.timed_out.is_set():
+            raise QueryTimeoutError()
+
+    def __exit__(self, exc_type, exc, tb) -> bool:
+        if self._timer:
+            self._timer.cancel()
+        if self._sc:
+            self._sc.setJobGroup(str(uuid.uuid4()), "idle")
+        mapped = exc
+        if isinstance(exc, Exception) and not isinstance(exc, DruidQueryError):
+            mapped = (QueryTimeoutError() if self.timed_out.is_set() else
+                      UnknownQueryError(str(exc), error_class=type(exc).__name__))
+        # The metrics row names the original failure, unless it was the
+        # deadline's cancel.
+        error = None if exc is None else type(
+            mapped if isinstance(mapped, QueryTimeoutError) else exc).__name__
+        self.engine._emit_metrics(  # noqa: SLF001
+            self.query, self.query_id, self.t0, success=exc is None,
+            rows=self.rows if exc is None else None,
+            cache_hit=self.cache_hit, error=error)
+        if mapped is not exc:
+            raise mapped from exc
+        return False
 
 
 def _iso(v):
@@ -295,12 +386,11 @@ class DruidEngine:
 
     def _cache_key(self, query: dict) -> str | None:
         """The result-cache key of ``query`` — its ETag — or None when
-        the cache can neither serve nor keep it: scan/select are never
-        cached (Druid likewise only caches per-segment aggregates), and
-        context.useCache / populateCache (both default true in Druid)
-        can switch the cache off."""
+        the cache can neither serve nor keep it: a streamed query is
+        never cached, and context.useCache / populateCache (both default
+        true in Druid) can switch the cache off."""
         context = query.get("context") or {}
-        if query.get("queryType") in ("scan", "select") or not (
+        if streamed(query) or not (
             context.get("useCache", True) or context.get("populateCache", True)
         ):
             return None
@@ -321,35 +411,14 @@ class DruidEngine:
         being referenced; plan() resolves the table after the key is
         taken, so an entry is never older than its key's version."""
         context = query.get("context") or {}
-        query_id = context.get("queryId") or str(uuid.uuid4())
-        timeout_ms = context.get("timeout")
-        t0 = time.perf_counter()
-        if key and context.get("useCache", True):
-            with self._result_cache_lock:
-                hit = self._result_cache.get(key)
-            if hit is not None:
-                self._emit_metrics(query, query_id, t0, success=True,
-                                   rows=len(hit.rows), cache_hit=True)
-                return hit
-        sc = self.spark.sparkContext
-        sc.setJobGroup(query_id, f"druid query {query_id}", interruptOnCancel=True)
-        # Query prioritization (query/query-module-overview.md: context
-        # priority knob; SURVEY §4 O12): map priority to a fair-scheduler
-        # pool so high-priority queries aren't starved by long scans.
-        if context.get("priority") is not None:
-            pool = "high" if int(context["priority"]) > 0 else "low"
-            sc.setLocalProperty("spark.scheduler.pool", pool)
-        timer = None
-        timed_out = threading.Event()
-        if timeout_ms:
-            def _cancel():
-                timed_out.set()
-                sc.cancelJobGroup(query_id)
-
-            timer = threading.Timer(timeout_ms / 1000.0, _cancel)
-            timer.daemon = True
-            timer.start()
-        try:
+        with _Lifecycle(self, query) as life:
+            if key and context.get("useCache", True):
+                with self._result_cache_lock:
+                    hit = self._result_cache.get(key)
+                if hit is not None:
+                    life.cache_hit, life.rows = True, len(hit.rows)
+                    return hit
+            life.start_spark()
             df = self.plan(query)
             # context.maxResults — the reference's groupBy resource limit
             # (query/query-module-overview.md:86): collect limit+1 rows in
@@ -384,74 +453,56 @@ class DruidEngine:
                 ]
             else:
                 rows = [r.asDict(recursive=True) for r in df.collect()]
-            if timed_out.is_set():
-                # The deadline passed while planning/collecting (the cancel
-                # may have landed between jobs) — the timeout contract wins.
-                raise QueryTimeoutError()
+            life.check_deadline()
             entry = _Result(self.serialize(query, rows))
             if key and context.get("populateCache", True):
                 with self._result_cache_lock:
                     if len(self._result_cache) >= self._result_cache_max:
                         self._result_cache.pop(next(iter(self._result_cache)))
                     self._result_cache[key] = entry
-            self._emit_metrics(query, query_id, t0, success=True, rows=len(entry.rows))
+            life.rows = len(entry.rows)
             return entry
-        except DruidQueryError as e:
-            self._emit_metrics(query, query_id, t0, success=False,
-                               error=type(e).__name__)
-            raise
-        except Exception as e:
-            if timed_out.is_set():
-                self._emit_metrics(query, query_id, t0, success=False,
-                                   error="QueryTimeoutError")
-                raise QueryTimeoutError() from e
-            self._emit_metrics(query, query_id, t0, success=False,
-                               error=type(e).__name__)
-            raise UnknownQueryError(str(e), error_class=type(e).__name__) from e
-        finally:
-            if timer:
-                timer.cancel()
-            sc.setJobGroup(str(uuid.uuid4()), "idle")
-            # Thread-local pool must not leak into the next query executed
-            # on a reused handler thread.
-            sc.setLocalProperty("spark.scheduler.pool", None)
 
     def execute_stream(self, query: dict | str):
-        """Streamed execution for row-returning queries — the analogue of
-        the reference's chunked JSON result sink
-        (query/query-internal-procedure.md:152-189).
+        """Streamed execution — the analogue of the reference's chunked
+        JSON result sink (query/query-internal-procedure.md:152-189).
 
-        scan/select/search results are yielded one serialized entry at a
-        time from ``toLocalIterator``: partitions arrive at the driver one
-        at a time, so an unbounded scan is O(partition) driver memory, not
-        O(table). Aggregation query types are bucket-bounded and fall back
-        to execute(). Cancellation still works via the query-id job group.
-        The query is planned before the iterator is returned, so a spec or
-        analysis error raises here, not from the first ``next()``.
+        A scan (see ``streamed``) yields its serialized entries
+        ``_SCAN_BATCH_ROWS`` rows at a time from ``toLocalIterator``:
+        partitions arrive at the driver one at a time, so an unbounded
+        scan is O(partition) driver memory, not O(table). Every other
+        query type is bounded and returns ``iter(execute(query))``. The
+        stream runs inside the same lifecycle as execute(): query id,
+        job group, context.timeout, one metrics row and the error
+        mapping. The query is planned before the iterator is returned,
+        so a spec or analysis error raises here, not from the first
+        ``next()``.
         """
         query = _parse_query(query)
-        if query.get("queryType") not in ("scan", "select", "search", "segmentMetadata"):
+        if not streamed(query):
             return iter(self.execute(query))
-        return self._stream(query, self.plan(query))
+        entries = self._stream(query)
+        next(entries)  # runs the lifecycle up to the plan
+        return entries
 
-    def _stream(self, query: dict, df):
-        select = query.get("queryType") == "select"
-        query_id = (query.get("context") or {}).get("queryId") or str(uuid.uuid4())
-        sc = self.spark.sparkContext
-        sc.setJobGroup(query_id, f"druid query {query_id} (streamed)",
-                       interruptOnCancel=True)
-        try:
-            for row in df.toLocalIterator(prefetchPartitions=True):
-                r = row.asDict(recursive=True)
-                if select:
-                    # The select envelope (pagingIdentifiers) is a batch
-                    # concept; the streamed form delivers plain rows like
-                    # scan (select's successor) does.
-                    yield {k: _iso(v) for k, v in r.items()}
-                else:
-                    yield self.serialize(query, [r])[0]
-        finally:
-            sc.setJobGroup(str(uuid.uuid4()), "idle")
+    def _stream(self, query: dict):
+        """execute_stream's generator: yields None once planning is done,
+        then the entries."""
+        with _Lifecycle(self, query) as life:
+            life.start_spark()
+            df = self.plan(query)
+            life.check_deadline()
+            yield None
+            rows = (r.asDict(recursive=True)
+                    for r in df.toLocalIterator(prefetchPartitions=True))
+            life.rows = 0
+            for batch in iter(lambda: list(islice(rows, _SCAN_BATCH_ROWS)), []):
+                # The deadline's cancel stops only a running job; between
+                # partitions the stream itself must stop.
+                life.check_deadline()
+                entries = self.serialize(query, batch)
+                life.rows += len(entries)
+                yield from entries
 
     def execute_json(self, query: dict | str) -> str:
         """Like execute() but never raises: failures return the JSON error
@@ -579,15 +630,18 @@ class DruidEngine:
                 }
             ]
         if qtype == "scan" and query.get("resultFormat") == "compactedList":
-            # Druid scan compactedList (public v0.12): one batch object
-            # with the column list once and each event as a value array —
-            # the wire-size-efficient form for wide scans.
+            # Druid scan compactedList (public v0.12): batch objects of up
+            # to _SCAN_BATCH_ROWS events, each with the column list once
+            # and each event as a value array — the wire-size-efficient
+            # form for wide scans. No rows, no batch, as in Druid.
             cols = list(rows[0].keys()) if rows else []
             return [
                 {
                     "columns": cols,
-                    "events": [[iso(r[c]) for c in cols] for r in rows],
+                    "events": [[iso(r[c]) for c in cols]
+                               for r in rows[i:i + _SCAN_BATCH_ROWS]],
                 }
+                for i in range(0, len(rows), _SCAN_BATCH_ROWS)
             ]
         # scan/select/search/segmentMetadata: row-per-entry
         return [{k: iso(v) for k, v in r.items()} for r in rows]

@@ -18,11 +18,17 @@ Queries execute on the Spark driver inside the request thread
 HTTP 500 with the exact reference envelope.
 
 A native query's ETag is computed once per request: it answers
-If-None-Match and is the result-cache key. A cache hit writes the JSON
-bytes the cache entry already holds, so it costs one hash, one dict
-lookup and the socket writes. Sockets run with TCP_NODELAY, so a small
-response never waits for the client's delayed ACK; streamed results are
-gathered into ~64 KiB chunks to keep writes and packets few.
+If-None-Match and is the result-cache key. The engine decides what
+streams (``engine.streamed``: only scan); every other native query,
+select included, gets execute_json's answer, and a cache hit writes the
+JSON bytes the cache entry already holds, so it costs one hash, one dict
+lookup and the socket writes. Either way the query runs inside the
+engine's one lifecycle: query id, job group, timeout, metrics row.
+Sockets run with TCP_NODELAY, so a small response never waits for the
+client's delayed ACK; streamed results are gathered into ~64 KiB chunks
+to keep writes and packets few. A stream's 200 head goes out with its
+first chunk, so a failure before that still gets the 500 envelope; a
+failure after it truncates the chunked body.
 """
 
 from __future__ import annotations
@@ -31,7 +37,7 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from coolplaydruid_spark.engine import DruidEngine
+from coolplaydruid_spark.engine import DruidEngine, streamed
 from coolplaydruid_spark.errors import envelope_for
 
 
@@ -137,41 +143,54 @@ def make_handler(engine: DruidEngine):
             Entries are gathered into chunks of about ``_CHUNK_BYTES``:
             with Nagle off, a chunk per row would cost a write and a
             packet per row. The last chunk and the terminator go out in
-            one write."""
-            self.send_response(200)
-            self.send_header("Content-Type", content_type)
-            self.send_header("Transfer-Encoding", "chunked")
-            for k, v in (headers or {}).items():
-                self.send_header(k, v)
-            self.end_headers()
+            one write.
 
+            The 200 head goes out with the first chunk, so a failure
+            before it propagates and still gets the 500 envelope. After
+            it no status line can be sent: the connection is closed
+            mid-body and the client sees a truncated chunked response."""
             buf = bytearray()
+            head_sent = False
 
-            def framed() -> bytes:
-                out = (f"{len(buf):X}\r\n".encode() + buf + b"\r\n") if buf else b""
+            def flush(end: bytes = b""):
+                nonlocal head_sent
+                if not head_sent:
+                    self.send_response(200)
+                    self.send_header("Content-Type", content_type)
+                    self.send_header("Transfer-Encoding", "chunked")
+                    for k, v in (headers or {}).items():
+                        self.send_header(k, v)
+                    self.end_headers()
+                    head_sent = True
+                chunk = (f"{len(buf):X}\r\n".encode() + buf + b"\r\n") if buf else b""
                 buf.clear()
-                return out
+                self.wfile.write(chunk + end)
 
             def add(piece: bytes):
                 buf.extend(piece)
                 if len(buf) >= _CHUNK_BYTES:
-                    self.wfile.write(framed())
+                    flush()
 
-            if lines:
-                for entry in entries:
-                    add(entry if isinstance(entry, bytes) else json.dumps(
-                        entry, default=str
-                    ).encode())
-                    add(b"\n")
-            else:
-                add(b"[")
-                first = True
-                for entry in entries:
-                    piece = json.dumps(entry, default=str).encode()
-                    add(piece if first else b"," + piece)
-                    first = False
-                add(b"]")
-            self.wfile.write(framed() + b"0\r\n\r\n")
+            try:
+                if lines:
+                    for entry in entries:
+                        add(entry if isinstance(entry, bytes) else json.dumps(
+                            entry, default=str
+                        ).encode())
+                        add(b"\n")
+                else:
+                    add(b"[")
+                    first = True
+                    for entry in entries:
+                        piece = json.dumps(entry, default=str).encode()
+                        add(piece if first else b"," + piece)
+                        first = False
+                    add(b"]")
+                flush(b"0\r\n\r\n")
+            except Exception:
+                if not head_sent:
+                    raise
+                self.close_connection = True
 
         def do_GET(self):  # noqa: N802
             # Druid clients append query params (?pretty, ?full, ...) to
@@ -233,123 +252,120 @@ def make_handler(engine: DruidEngine):
 
         def do_POST(self):  # noqa: N802
             body = self._read_body()
-            if self.path == "/druid/v2" or self.path == "/druid/v2/":
-                try:
-                    query = json.loads(body)
-                except json.JSONDecodeError as e:
-                    self._send(500, json.dumps(envelope_for(e)).encode())
-                    return
-                etag = engine.etag(query)
-                if etag and self.headers.get("If-None-Match") == etag:
-                    self._send(304, b"", {"ETag": etag})
-                    return
-                try:
-                    if query.get("queryType") in ("scan", "select"):
-                        # Row-returning queries stream chunked. The stream
-                        # is planned before it is returned, so spec and
-                        # analysis errors still get the 500 envelope
-                        # instead of a broken stream.
-                        entries = engine.execute_stream(query)
-                        self._send_stream(entries, {"ETag": etag} if etag else None)
-                        return
-                    # The ETag above is also the result-cache key.
-                    body = engine._result(query, etag).body  # noqa: SLF001
-                    self._send(200, body, {"ETag": etag} if etag else None)
-                except Exception as e:  # noqa: BLE001
-                    self._send(500, json.dumps(envelope_for(e)).encode())
-                return
-            if self.path in ("/druid/v2/sql", "/druid/v2/sql/"):
-                # Druid SQL over HTTP: {"query": str, "parameters":
-                # [{"type", "value"}...], "resultFormat": "object"|
-                # "array", "header": bool}. Results stream chunked, the
-                # same sink as scan (query-internal-procedure.md:152-189).
-                try:
-                    spec = json.loads(body)
-                    sql_text = spec["query"]
-                    params = spec.get("parameters") or []
-                    args = [_coerce_sql_param(p) for p in params] or None
-                    fmt = spec.get("resultFormat", "object")
-                    if fmt not in ("object", "array", "objectLines",
-                                   "arrayLines", "csv"):
-                        raise ValueError(
-                            f"unsupported resultFormat {fmt!r}; supported: "
-                            "object, array, objectLines, arrayLines, csv"
-                        )
-                    df = engine.sql(sql_text, args=args)
-                    cols = df.schema.fieldNames()  # force analysis pre-stream
-                except Exception as e:  # noqa: BLE001
-                    self._send(500, json.dumps(envelope_for(e)).encode())
-                    return
-                import itertools
-
-                it = df.toLocalIterator()
-                header = bool(spec.get("header"))
-                # Rows are accessed POSITIONALLY (iterating a Row yields
-                # values in select-list order): name-based access returns
-                # the first match for duplicate output names, silently
-                # corrupting `SELECT 1 AS x, 2 AS x`. The object formats
-                # keep JSON-object semantics (duplicate keys collapse,
-                # last wins — same as Druid's JSON objects).
-                if fmt in ("object", "objectLines"):
-                    entries = (
-                        {k: _jsonable(v) for k, v in zip(cols, row)}
-                        for row in it
-                    )
-                elif fmt == "csv":
-                    def _csv_cell(v):
-                        if v is None:
-                            return ""
-                        s = str(v)
-                        if any(ch in s for ch in ',"\n\r'):
-                            s = '"' + s.replace('"', '""') + '"'
-                        return s
-
-                    entries = (
-                        ",".join(_csv_cell(v) for v in row).encode()
-                        for row in it
-                    )
-                    if header:
-                        entries = itertools.chain(
-                            [",".join(_csv_cell(c) for c in cols).encode()],
-                            entries,
-                        )
+            try:
+                if self.path in ("/druid/v2", "/druid/v2/"):
+                    self._post_query(json.loads(body))
+                elif self.path in ("/druid/v2/sql", "/druid/v2/sql/"):
+                    self._post_sql(json.loads(body))
+                elif self.path == "/druid/indexer/v1/task":
+                    self._post_task(json.loads(body))
                 else:
-                    entries = ([_jsonable(v) for v in row] for row in it)
-                    if header:
-                        entries = itertools.chain([cols], entries)
-                self._send_stream(
-                    entries,
-                    lines=fmt in ("objectLines", "arrayLines", "csv"),
-                    content_type="text/csv" if fmt == "csv"
-                    else "application/json",
-                )
-                return
-            if self.path == "/druid/indexer/v1/task":
-                from coolplaydruid_spark.sources import batch
+                    self._send(404, b'{"error": "not found"}')
+            except Exception as e:  # noqa: BLE001
+                # Nothing of the response has gone out: a stream whose
+                # head is out ends itself (see _send_stream).
+                self._send(500, json.dumps(envelope_for(e)).encode())
 
-                try:
-                    spec = json.loads(body)
-                    ttype = spec.get("type", "index")
-                    if ttype == "noop":
-                        st = batch.noop_task()
-                    elif ttype in ("index", "index_hadoop", "append"):
-                        io = spec["spec"]
-                        fn = batch.append_task if ttype == "append" else batch.index_task
-                        st = fn(
-                            engine.spark,
-                            io["source"],
-                            io["destPath"],
-                            time_column=io["timeColumn"],
-                            rollup=io.get("rollup"),
-                            sort_by=io.get("sortBy"),
-                        )
-                    else:
-                        raise ValueError(f"unsupported task type {ttype!r}")
-                    self._send(200, json.dumps({"task": st.task_id}).encode())
-                except Exception as e:  # noqa: BLE001
-                    self._send(500, json.dumps(envelope_for(e)).encode())
+        def _post_query(self, query: dict):
+            """A native query. Its ETag, computed once, answers
+            If-None-Match and is the result-cache key. A scan streams
+            (``streamed``); every other query is answered whole from
+            the result cache."""
+            etag = engine.etag(query)
+            if etag and self.headers.get("If-None-Match") == etag:
+                self._send(304, b"", {"ETag": etag})
                 return
-            self._send(404, b'{"error": "not found"}')
+            headers = {"ETag": etag} if etag else None
+            if streamed(query):
+                # Planned before the iterator is returned, so spec and
+                # analysis errors still get the 500 envelope.
+                self._send_stream(engine.execute_stream(query), headers)
+            else:
+                self._send(200, engine._result(query, etag).body, headers)  # noqa: SLF001
+
+        def _post_sql(self, spec: dict):
+            """Druid SQL over HTTP: {"query": str, "parameters":
+            [{"type", "value"}...], "resultFormat": "object"|"array"|
+            "objectLines"|"arrayLines"|"csv", "header": bool}. Results
+            stream chunked, the same sink as scan
+            (query-internal-procedure.md:152-189)."""
+            sql_text = spec["query"]
+            params = spec.get("parameters") or []
+            args = [_coerce_sql_param(p) for p in params] or None
+            fmt = spec.get("resultFormat", "object")
+            if fmt not in ("object", "array", "objectLines",
+                           "arrayLines", "csv"):
+                raise ValueError(
+                    f"unsupported resultFormat {fmt!r}; supported: "
+                    "object, array, objectLines, arrayLines, csv"
+                )
+            df = engine.sql(sql_text, args=args)
+            cols = df.schema.fieldNames()  # force analysis pre-stream
+            import itertools
+
+            it = df.toLocalIterator()
+            header = bool(spec.get("header"))
+            # Rows are accessed POSITIONALLY (iterating a Row yields
+            # values in select-list order): name-based access returns
+            # the first match for duplicate output names, silently
+            # corrupting `SELECT 1 AS x, 2 AS x`. The object formats
+            # keep JSON-object semantics (duplicate keys collapse,
+            # last wins — same as Druid's JSON objects).
+            if fmt in ("object", "objectLines"):
+                entries = (
+                    {k: _jsonable(v) for k, v in zip(cols, row)}
+                    for row in it
+                )
+            elif fmt == "csv":
+                def _csv_cell(v):
+                    if v is None:
+                        return ""
+                    s = str(v)
+                    if any(ch in s for ch in ',"\n\r'):
+                        s = '"' + s.replace('"', '""') + '"'
+                    return s
+
+                entries = (
+                    ",".join(_csv_cell(v) for v in row).encode()
+                    for row in it
+                )
+                if header:
+                    entries = itertools.chain(
+                        [",".join(_csv_cell(c) for c in cols).encode()],
+                        entries,
+                    )
+            else:
+                entries = ([_jsonable(v) for v in row] for row in it)
+                if header:
+                    entries = itertools.chain([cols], entries)
+            self._send_stream(
+                entries,
+                lines=fmt in ("objectLines", "arrayLines", "csv"),
+                content_type="text/csv" if fmt == "csv"
+                else "application/json",
+            )
+
+        def _post_task(self, spec: dict):
+            """Submit an index task."""
+            from coolplaydruid_spark.sources import batch
+
+            ttype = spec.get("type", "index")
+            if ttype == "noop":
+                st = batch.noop_task()
+            elif ttype in ("index", "index_hadoop", "append"):
+                io = spec["spec"]
+                fn = batch.append_task if ttype == "append" else batch.index_task
+                st = fn(
+                    engine.spark,
+                    io["source"],
+                    io["destPath"],
+                    time_column=io["timeColumn"],
+                    rollup=io.get("rollup"),
+                    sort_by=io.get("sortBy"),
+                )
+            else:
+                raise ValueError(f"unsupported task type {ttype!r}")
+            self._send(200, json.dumps({"task": st.task_id}).encode())
 
         def do_DELETE(self):  # noqa: N802
             if self.path.startswith("/druid/v2/"):

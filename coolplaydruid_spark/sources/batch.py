@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import shutil
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from pathlib import Path
@@ -56,14 +58,20 @@ class TaskRegistry:
     def __init__(self):
         self._tasks: dict[str, TaskStatus] = {}
 
-    def start(self, task_type: str) -> TaskStatus:
+    @contextmanager
+    def task(self, task_type: str) -> Iterator[TaskStatus]:
+        """One task's status from start to finish: RUNNING while the
+        body runs, then SUCCESS with the detail the body set on the
+        status, or FAILED with the error's message (the error
+        propagates)."""
         status = TaskStatus(str(uuid.uuid4()), task_type, "RUNNING")
         self._tasks[status.task_id] = status
-        return status
-
-    def finish(self, task_id: str, ok: bool, detail: str = "") -> None:
-        self._tasks[task_id].status = "SUCCESS" if ok else "FAILED"
-        self._tasks[task_id].detail = detail
+        try:
+            yield status
+        except Exception as e:
+            status.status, status.detail = "FAILED", str(e)
+            raise
+        status.status = "SUCCESS"
 
     def get(self, task_id: str) -> TaskStatus:
         return self._tasks[task_id]
@@ -276,7 +284,7 @@ def _write_signatures(sig_frames: list, dest_path: str, mode: str) -> None:
     __dt partitions first (kill_task on the task's dates), then re-run
     the append — or keep the segments and backfill with signature_task.
     True all-or-nothing needs a table format with a commit protocol (see
-    auto_compact_task's swap note)."""
+    _compact's swap note)."""
     if mode == "overwrite":
         sig_dir = str(dest_path).rstrip("/") + ".sig"
         shutil.rmtree(sig_dir, ignore_errors=True)
@@ -317,8 +325,7 @@ def signature_task(spark: SparkSession, table_path: str, time_column: str,
     ingest rollup the segments no longer carry the raw per-row columns,
     so signature backfill only applies to non-rolled-up tables (the
     normal shape for document/media corpora)."""
-    status = REGISTRY.start("signature")
-    try:
+    with REGISTRY.task("signature") as status:
         df = spark.read.parquet(table_path)
         raw_dt = df
         if DT_COLUMN not in df.columns:
@@ -332,12 +339,7 @@ def signature_task(spark: SparkSession, table_path: str, time_column: str,
                 [(name, sig_df, _signature_sort_keys(spec),
                   spec.get("write_options"))],
                 table_path, "overwrite_table")
-        REGISTRY.finish(
-            status.task_id, True,
-            f"rebuilt {len(signatures)} signature tables for {table_path}")
-    except Exception as e:  # noqa: BLE001
-        REGISTRY.finish(status.task_id, False, str(e))
-        raise
+        status.detail = f"rebuilt {len(signatures)} signature tables for {table_path}"
     return status
 
 
@@ -513,8 +515,7 @@ def index_task(
     ``read_signatures`` instead of re-decoding/re-shingling the corpus —
     the plan-asserted decode-free path (tests/test_ingest.py).
     """
-    status = REGISTRY.start("index")
-    try:
+    with REGISTRY.task("index") as status:
         df = _read_source(spark, source)
         ts = F.col(time_column).cast("timestamp")
         df = df.withColumn(time_column, ts)
@@ -595,12 +596,8 @@ def index_task(
             # shard dims too
             writer.sortBy(*(sort_by or dims)).format("parquet").saveAsTable(name)
             _write_signatures(sig_frames, dest_path, mode)
-            REGISTRY.finish(
-                status.task_id,
-                True,
-                f"wrote {dest_path} as bucketed table {name} "
-                f"({shards} shards on {dims})",
-            )
+            status.detail = (f"wrote {dest_path} as bucketed table {name} "
+                             f"({shards} shards on {dims})")
             return status
         writer = out.write.mode(mode)
         if mode == "overwrite":
@@ -615,10 +612,7 @@ def index_task(
             writer = writer.option("partitionOverwriteMode", "static")
         writer.partitionBy(DT_COLUMN).parquet(dest_path)
         _write_signatures(sig_frames, dest_path, mode)
-        REGISTRY.finish(status.task_id, True, f"wrote {dest_path}")
-    except Exception as e:  # noqa: BLE001
-        REGISTRY.finish(status.task_id, False, str(e))
-        raise
+        status.detail = f"wrote {dest_path}"
     return status
 
 
@@ -630,26 +624,14 @@ def append_task(spark: SparkSession, source: dict, dest_path: str,
 
 def merge_task(spark: SparkSession, table_path: str,
                target_files_per_partition: int = 1) -> TaskStatus:
-    """Druid `merge` task (I5) / compaction: rewrite a table's partitions
-    into fewer, larger files (small-file mitigation for streaming sinks).
-    Uses dynamic partition overwrite so only rewritten partitions swap —
-    the Spark analogue of Druid's atomic segment-version replace."""
-    status = REGISTRY.start("merge")
-    try:
-        df = spark.read.parquet(table_path)
-        tmp = table_path.rstrip("/") + ".__compact_tmp"
-        (
-            df.repartition(target_files_per_partition, F.col(DT_COLUMN))
-            .write.mode("overwrite")
-            .partitionBy(DT_COLUMN)
-            .parquet(tmp)
-        )
-        shutil.rmtree(table_path)
-        Path(tmp).rename(table_path)
-        REGISTRY.finish(status.task_id, True, "compacted")
-    except Exception as e:  # noqa: BLE001
-        REGISTRY.finish(status.task_id, False, str(e))
-        raise
+    """Druid `merge` task (I5) / compaction: rewrite every partition of a
+    table into ``target_files_per_partition`` files (small-file
+    mitigation for streaming sinks) — auto_compact_task's per-partition
+    rewrite-and-swap with every partition eligible, so the table root
+    itself is never removed."""
+    with REGISTRY.task("merge") as status:
+        _compact(spark, table_path, 0, target_files_per_partition)
+        status.detail = "compacted"
     return status
 
 
@@ -664,8 +646,19 @@ def auto_compact_task(spark: SparkSession, table_path: str,
 
     Incremental by construction: cost is proportional to the fragmented
     data, not the table (a full-table merge_task at 100 TB rewrites
-    everything to fix one hot day). ``__dt`` lives in the directory
-    name, so rewriting a partition's files preserves read semantics.
+    everything to fix one hot day)."""
+    with REGISTRY.task("auto_compact") as status:
+        compacted = _compact(spark, table_path, max_files_per_dt, target_files)
+        status.detail = f"compacted {len(compacted)} partitions: {compacted[:10]}"
+    return status
+
+
+def _compact(spark: SparkSession, table_path: str, max_files: int,
+             target_files: int) -> list[str]:
+    """Rewrite each ``__dt`` partition holding more than ``max_files``
+    parquet files into ``target_files`` files; returns the rewritten
+    partitions' names. ``__dt`` lives in the directory name, so
+    rewriting a partition's files preserves read semantics.
 
     Swap discipline: the rewrite lands in a scratch dir OUTSIDE the
     table root (``<table>.__compact__/<dt>``) — partition discovery and
@@ -678,31 +671,22 @@ def auto_compact_task(spark: SparkSession, table_path: str,
     for exactly this reason; on a lakehouse table format (Iceberg/Delta)
     the commit protocol supplies it. Leftover scratch from a previous
     crash is re-used/cleaned at the start of each run."""
-    status = REGISTRY.start("auto_compact")
-    try:
-        root = Path(table_path)
-        scratch_root = Path(str(root).rstrip("/") + ".__compact__")
-        shutil.rmtree(scratch_root, ignore_errors=True)
-        compacted = []
-        for part in sorted(root.glob(f"{DT_COLUMN}=*")):
-            files = list(part.glob("*.parquet"))
-            if len(files) <= max_files_per_dt:
-                continue
-            df = spark.read.parquet(str(part))
-            tmp = scratch_root / part.name
-            df.repartition(target_files).write.mode("overwrite").parquet(str(tmp))
-            shutil.rmtree(part)
-            tmp.rename(part)
-            compacted.append(part.name)
-        shutil.rmtree(scratch_root, ignore_errors=True)
-        REGISTRY.finish(
-            status.task_id, True,
-            f"compacted {len(compacted)} partitions: {compacted[:10]}",
-        )
-    except Exception as e:  # noqa: BLE001
-        REGISTRY.finish(status.task_id, False, str(e))
-        raise
-    return status
+    root = Path(table_path)
+    scratch_root = Path(str(root).rstrip("/") + ".__compact__")
+    shutil.rmtree(scratch_root, ignore_errors=True)
+    compacted = []
+    for part in sorted(root.glob(f"{DT_COLUMN}=*")):
+        files = list(part.glob("*.parquet"))
+        if len(files) <= max_files:
+            continue
+        df = spark.read.parquet(str(part))
+        tmp = scratch_root / part.name
+        df.repartition(target_files).write.mode("overwrite").parquet(str(tmp))
+        shutil.rmtree(part)
+        tmp.rename(part)
+        compacted.append(part.name)
+    shutil.rmtree(scratch_root, ignore_errors=True)
+    return compacted
 
 
 def _sig_roots(table_path: str) -> list[Path]:
@@ -729,18 +713,14 @@ def kill_task(table_path: str, dt_values: list[str]) -> TaskStatus:
     the bucket start while signature tables keep raw per-row dates —
     pass every raw date to cover the store, or use retention_task,
     which lists victims across the segment AND signature roots."""
-    status = REGISTRY.start("kill")
-    try:
+    with REGISTRY.task("kill") as status:
         roots = [Path(table_path), *_sig_roots(table_path)]
         for dt in dt_values:
             for root in roots:
                 p = root / f"{DT_COLUMN}={dt}"
                 if p.exists():
                     shutil.rmtree(p)
-        REGISTRY.finish(status.task_id, True, f"dropped {len(dt_values)} partitions")
-    except Exception as e:  # noqa: BLE001
-        REGISTRY.finish(status.task_id, False, str(e))
-        raise
+        status.detail = f"dropped {len(dt_values)} partitions"
     return status
 
 
@@ -758,8 +738,7 @@ def retention_task(table_path: str, drop_before: str,
     functions of the pre-rollup data), so listing only segment dirs
     would leave in-range ghost signature partitions behind (review
     find)."""
-    status = REGISTRY.start("retention")
-    try:
+    with REGISTRY.task("retention") as status:
         victims = sorted({
             p.name.split("=", 1)[1]
             for root in [Path(table_path), *_sig_roots(table_path)]
@@ -771,13 +750,8 @@ def retention_task(table_path: str, drop_before: str,
                 archive_task(table_path, archive_path, victims)
             else:
                 kill_task(table_path, victims)
-        REGISTRY.finish(
-            status.task_id, True,
-            f"{'archived' if archive_path else 'dropped'} {len(victims)} partitions"
-        )
-    except Exception as e:  # noqa: BLE001
-        REGISTRY.finish(status.task_id, False, str(e))
-        raise
+        status.detail = (f"{'archived' if archive_path else 'dropped'} "
+                         f"{len(victims)} partitions")
     return status
 
 
@@ -787,11 +761,10 @@ def archive_task(table_path: str, archive_path: str, dt_values: list[str],
     partitions between live and archive storage roots — signature-table
     partitions move in lockstep (to <archive>.sig/<name>), so a restored
     segment comes back with its accept-time signatures."""
-    status = REGISTRY.start("restore" if restore else "archive")
     src_root, dst_root = (
         (archive_path, table_path) if restore else (table_path, archive_path)
     )
-    try:
+    with REGISTRY.task("restore" if restore else "archive") as status:
         moves = [(Path(src_root), Path(dst_root))]
         sig_src = _sig_roots(src_root)
         for s in sig_src:
@@ -803,10 +776,7 @@ def archive_task(table_path: str, archive_path: str, dt_values: list[str],
                 src = src_r / f"{DT_COLUMN}={dt}"
                 if src.exists():
                     shutil.move(str(src), str(dst_r / f"{DT_COLUMN}={dt}"))
-        REGISTRY.finish(status.task_id, True, "moved")
-    except Exception as e:  # noqa: BLE001
-        REGISTRY.finish(status.task_id, False, str(e))
-        raise
+        status.detail = "moved"
     return status
 
 
@@ -814,25 +784,20 @@ def convert_segment_task(spark: SparkSession, table_path: str, dest_path: str,
                          codec: str = "zstd") -> TaskStatus:
     """Druid `convert_segment` task (I7): rewrite segments with a new
     format/codec version."""
-    status = REGISTRY.start("convert_segment")
-    try:
+    with REGISTRY.task("convert_segment") as status:
         df = spark.read.parquet(table_path)
         writer = df.write.mode("overwrite").option("compression", codec)
         if DT_COLUMN in df.columns:
             writer = writer.partitionBy(DT_COLUMN)
         writer.parquet(dest_path)
-        REGISTRY.finish(status.task_id, True, f"rewrote with {codec}")
-    except Exception as e:  # noqa: BLE001
-        REGISTRY.finish(status.task_id, False, str(e))
-        raise
+        status.detail = f"rewrote with {codec}"
     return status
 
 
 def noop_task() -> TaskStatus:
     """Druid `noop` test task (I8)."""
-    status = REGISTRY.start("noop")
-    REGISTRY.finish(status.task_id, True)
-    return status
+    with REGISTRY.task("noop") as status:
+        return status
 
 
 def register_ingested(catalog: Catalog, name: str, path: str,

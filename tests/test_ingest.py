@@ -157,6 +157,36 @@ def test_append_merge_kill_archive(spark, tmp_path):
     assert all(t.status == "SUCCESS" for t in batch.REGISTRY.all())
 
 
+
+def test_merge_rewrites_each_partition_never_the_table_root(spark, tmp_path, monkeypatch):
+    """merge_task rewrites partition by partition: every partition ends
+    with between 2 and n files (a day is split across n files, not held
+    in one task), row counts per day are unchanged, and the table root is
+    never removed, so the table never goes missing mid-merge."""
+    import shutil
+    from pathlib import Path
+
+    dest = str(tmp_path / "tbl")
+    src = {"format": "parquet", "path": f"{SF_DIR}/events.parquet"}
+    batch.index_task(spark, src, dest, time_column="ts")
+    batch.append_task(spark, src, dest, time_column="ts")
+
+    def per_day():
+        return {tuple(r) for r in spark.read.parquet(dest)
+                .groupBy(batch.DT_COLUMN).count().collect()}
+
+    before = per_day()
+    removed = []
+    rmtree = shutil.rmtree
+    monkeypatch.setattr(shutil, "rmtree",
+                        lambda p, *a, **k: removed.append(Path(p)) or rmtree(p, *a, **k))
+    status = batch.merge_task(spark, dest, target_files_per_partition=3)
+    assert batch.REGISTRY.get(status.task_id).status == "SUCCESS"
+    assert Path(dest) not in removed
+    assert per_day() == before
+    counts = [len(list(p.glob("*.parquet"))) for p in Path(dest).glob(f"{batch.DT_COLUMN}=*")]
+    assert counts and all(1 < n <= 3 for n in counts)
+
 EVENT_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
     T.StructField("ts", T.StringType()),

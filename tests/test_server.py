@@ -683,3 +683,113 @@ def test_reregistered_lookup_is_never_served_stale(engine):
     assert set(second) == {"industry", "other"}
     assert sum(second.values()) == sum(first.values())
     assert engine.etag(q) != tag
+
+
+# ---- one query lifecycle for cached and streamed native queries ---------
+
+UNION_SCAN = {
+    "queryType": "scan",
+    "dataSource": {"type": "union", "dataSources": ["events"] * 40},
+    "columns": ["event_id", "event_type"],
+    "intervals": ["2024-01-01T00:00:00/2024-02-01T00:00:00"],
+}
+
+
+def test_http_compacted_list_and_select_match_execute_json(server, engine):
+    """Over HTTP a compactedList scan streams Druid batches of at most
+    _SCAN_BATCH_ROWS rows, not one batch per row, and a select keeps its
+    paging envelope: both bodies equal execute_json's answer."""
+    from coolplaydruid_spark import engine as engine_mod
+
+    limited = {
+        "queryType": "scan", "dataSource": "events", "resultFormat": "compactedList",
+        "columns": ["event_id", "event_type"], "limit": 3,
+        "intervals": ["2024-01-01T00:00:00/2024-01-03T00:00:00"],
+    }
+    wide = dict(UNION_SCAN, resultFormat="compactedList")
+    select = {
+        "queryType": "select", "dataSource": "events", "dimensions": ["event_type"],
+        "metrics": ["value"], "intervals": ["2024-01-01T00:00:00/2024-02-01T00:00:00"],
+        "pagingSpec": {"threshold": 5, "offset": 5},
+    }
+    for q in (limited, wide, select):
+        status, _, body = _req(server, "POST", "/druid/v2", q)
+        assert status == 200
+        assert json.loads(body) == json.loads(engine.execute_json(q))
+    status, headers, body = _req(server, "POST", "/druid/v2", wide)
+    batches = json.loads(body)
+    assert headers.get("Transfer-Encoding") == "chunked"
+    assert [len(b["events"]) for b in batches] == [engine_mod._SCAN_BATCH_ROWS,  # noqa: SLF001
+                                                   40000 - engine_mod._SCAN_BATCH_ROWS]  # noqa: SLF001
+    assert len(json.loads(_req(server, "POST", "/druid/v2", limited)[2])) == 1
+    page = json.loads(_req(server, "POST", "/druid/v2", select)[2])
+    assert page[0]["result"]["pagingIdentifiers"] == {"events": 10}
+
+
+def test_http_scan_records_one_metrics_row(server, engine):
+    q = dict(UNION_SCAN, dataSource="events", context={"queryId": "scan-m-1"})
+    status, _, body = _req(server, "POST", "/druid/v2", q)
+    assert status == 200
+    rows = json.loads(body)
+    m = engine.metrics("scan-m-1")
+    assert len(m) == 1
+    assert m[0]["success"] and m[0]["queryType"] == "scan"
+    assert m[0]["rows"] == len(rows) > 0 and not m[0]["cacheHit"]
+
+
+def test_http_scan_timeout_is_enveloped(server, engine):
+    """context.timeout holds for a streamed scan as for execute(): the
+    40x union (as in test_timeout_enforced) answers 500 with the
+    timeout envelope, not 200 with every row."""
+    q = dict(UNION_SCAN, context={"timeout": 1, "queryId": "scan-timeout-1"})
+    status, _, body = _req(server, "POST", "/druid/v2", q)
+    assert status == 500
+    assert json.loads(body)["error"] == "Query timeout"
+    m = engine.metrics("scan-timeout-1")
+    assert len(m) == 1 and m[0]["error"] == "QueryTimeoutError"
+
+
+def test_http_stream_failure_after_head_truncates(server, engine, monkeypatch):
+    """A scan that fails after its first chunk is out ends the connection
+    mid-body: no terminating chunk and no second status line."""
+    import socket
+
+    calls = []
+    serialize = engine.serialize
+
+    def failing(query, rows):
+        calls.append(len(rows))
+        if len(calls) > 1:
+            raise RuntimeError("injected after the first chunk")
+        return serialize(query, rows)
+
+    monkeypatch.setattr(engine, "serialize", failing)
+    body = json.dumps(dict(UNION_SCAN, context={"queryId": "scan-broken-1"})).encode()
+    with socket.create_connection(("127.0.0.1", server.port), timeout=120) as sock:
+        sock.sendall(b"POST /druid/v2 HTTP/1.1\r\nHost: x\r\nConnection: close\r\n"
+                     + f"Content-Length: {len(body)}\r\n\r\n".encode() + body)
+        raw = b""
+        while chunk := sock.recv(1 << 16):
+            raw += chunk
+    assert raw.startswith(b"HTTP/1.1 200")
+    assert raw.count(b"HTTP/1.1") == 1
+    assert len(raw) > 64 * 1024 and not raw.endswith(b"0\r\n\r\n")
+    m = engine.metrics("scan-broken-1")
+    assert len(m) == 1 and not m[0]["success"] and m[0]["error"] == "RuntimeError"
+
+
+def test_cache_hit_stays_off_spark(engine, monkeypatch):
+    """A result-cache hit runs the lifecycle without its Spark part: no
+    job group is set and no timeout timer starts."""
+    import threading
+
+    from pyspark import SparkContext
+
+    q = dict(_count_query("events", timeout=60000), granularity="day")
+    engine.execute(q)  # fills the result cache
+    calls = []
+    monkeypatch.setattr(SparkContext, "setJobGroup", lambda *a, **k: calls.append(a))
+    monkeypatch.setattr(threading, "Timer", lambda *a, **k: calls.append(a))
+    engine.execute(q)
+    assert engine.metrics()[-1]["cacheHit"]
+    assert calls == []
