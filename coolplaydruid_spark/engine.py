@@ -131,7 +131,7 @@ class _Lifecycle:
         self.timeout_ms = context.get("timeout")
         self.rows: int | None = None
         self.cache_hit = False
-        self.timed_out = threading.Event()
+        self.timed_out = False
         self._sc = None
         self._timer: threading.Timer | None = None
 
@@ -145,7 +145,7 @@ class _Lifecycle:
                        interruptOnCancel=True)
         if self.timeout_ms:
             def expire():
-                self.timed_out.set()
+                self.timed_out = True
                 sc.cancelJobGroup(self.query_id)
 
             self._timer = threading.Timer(self.timeout_ms / 1000.0, expire)
@@ -155,7 +155,7 @@ class _Lifecycle:
     def check_deadline(self) -> None:
         """Raise once the deadline has passed: its cancel may have landed
         between two Spark jobs and stopped nothing."""
-        if self.timed_out.is_set():
+        if self.timed_out:
             raise QueryTimeoutError()
 
     def __exit__(self, exc_type, exc, tb) -> bool:
@@ -165,7 +165,7 @@ class _Lifecycle:
             self._sc.setJobGroup(str(uuid.uuid4()), "idle")
         mapped = exc
         if isinstance(exc, Exception) and not isinstance(exc, DruidQueryError):
-            mapped = (QueryTimeoutError() if self.timed_out.is_set() else
+            mapped = (QueryTimeoutError() if self.timed_out else
                       UnknownQueryError(str(exc), error_class=type(exc).__name__))
         # The metrics row names the original failure, unless it was the
         # deadline's cancel.
