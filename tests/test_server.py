@@ -712,18 +712,17 @@ def test_http_compacted_list_and_select_match_execute_json(server, engine):
         "metrics": ["value"], "intervals": ["2024-01-01T00:00:00/2024-02-01T00:00:00"],
         "pagingSpec": {"threshold": 5, "offset": 5},
     }
+    got = []
     for q in (limited, wide, select):
-        status, _, body = _req(server, "POST", "/druid/v2", q)
+        status, headers, body = _req(server, "POST", "/druid/v2", q)
         assert status == 200
-        assert json.loads(body) == json.loads(engine.execute_json(q))
-    status, headers, body = _req(server, "POST", "/druid/v2", wide)
-    batches = json.loads(body)
-    assert headers.get("Transfer-Encoding") == "chunked"
-    assert [len(b["events"]) for b in batches] == [engine_mod._SCAN_BATCH_ROWS,  # noqa: SLF001
-                                                   40000 - engine_mod._SCAN_BATCH_ROWS]  # noqa: SLF001
-    assert len(json.loads(_req(server, "POST", "/druid/v2", limited)[2])) == 1
-    page = json.loads(_req(server, "POST", "/druid/v2", select)[2])
-    assert page[0]["result"]["pagingIdentifiers"] == {"events": 10}
+        got.append(json.loads(body))
+        assert got[-1] == json.loads(engine.execute_json(q))
+        assert (headers.get("Transfer-Encoding") == "chunked") == (q is not select)
+    n = engine_mod._SCAN_BATCH_ROWS  # noqa: SLF001
+    assert len(got[0]) == 1 and len(got[0][0]["events"]) == 3
+    assert [len(b["events"]) for b in got[1]] == [n, 40000 - n]
+    assert got[2][0]["result"]["pagingIdentifiers"] == {"events": 10}
 
 
 def test_http_scan_records_one_metrics_row(server, engine):
