@@ -43,11 +43,6 @@ class QueryTimeoutError(DruidQueryError):
         super().__init__("Query timeout", message)
 
 
-class QueryInterruptedError(DruidQueryError):
-    def __init__(self, message: str = "Query interrupted"):
-        super().__init__("Query interrupted", message)
-
-
 class QueryCancelledError(DruidQueryError):
     def __init__(self, message: str = "Query cancelled"):
         super().__init__("Query cancelled", message)

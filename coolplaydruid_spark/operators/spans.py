@@ -112,34 +112,6 @@ def _mark_positions(
     return w.join(dup, on="h").select(id_col, "pos")
 
 
-def duplicate_span_positions(
-    df: DataFrame,
-    window: int = DEFAULT_WINDOW,
-    min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    within_doc: bool = False,
-    cache: bool = False,
-) -> DataFrame:
-    """(id, pos) for every window start whose ``window``-token span also
-    appears in at least ``min_docs`` distinct documents (including this
-    one). ``within_doc=True`` additionally marks spans repeated INSIDE a
-    single document (some document contains the span ≥ 2 times — checked
-    per document, so it composes correctly with ``min_docs`` > 2) — the
-    full Lee-et-al. duplicate-substring criterion.
-
-    ``cache=True`` persists the window-hash table, which the plan uses
-    twice (mark groupBy + join back) — one tokenize+hash scan instead
-    of two. Same not-unpersisted-here convention as
-    ``dedup.minhash_lsh_dedup``: the result is lazy and still
-    references the persisted frame; batch callers should
-    ``spark.catalog.clearCache()`` between corpora."""
-    w = _window_hashes(_tokenized(df, text_col, id_col), window, id_col)
-    if cache:
-        w = w.persist()
-    return _mark_positions(w, id_col, min_docs, within_doc)
-
-
 def duplicate_span_stats(
     df: DataFrame,
     window: int = DEFAULT_WINDOW,

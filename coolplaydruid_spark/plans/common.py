@@ -305,14 +305,19 @@ def zero_fill(
 
     Both sides are bucket-cardinality; for the common small spine the
     aggregate side is broadcast (Spark cannot broadcast the preserved
-    side of a left-outer join), so the spine join adds no shuffle. Above
-    ZERO_FILL_BROADCAST_MAX buckets the hint is dropped — the aggregate
-    side is spine-sized too, and forcing a multi-million-row broadcast
-    would hit Spark's broadcast cap where AQE can pick a shuffle join.
+    side of a left-outer join), so the spine join adds no shuffle, and
+    the spine — the preserved side — is read as one partition. The join
+    output is then a single partition, so the caller's ordering is a
+    local sort: no range-partition exchange, with its sampling job and
+    shuffle. Above ZERO_FILL_BROADCAST_MAX buckets the hint is dropped
+    and the spine keeps its partitions — the aggregate side is
+    spine-sized too, and forcing a multi-million-row broadcast would hit
+    Spark's broadcast cap where AQE can pick a shuffle join.
     """
     small = spine_rows is None or spine_rows <= ZERO_FILL_BROADCAST_MAX
-    right = F.broadcast(agg_df) if small else agg_df
-    joined = spine.join(right, on=BUCKET, how="left")
+    if small:
+        spine, agg_df = spine.coalesce(1), F.broadcast(agg_df)
+    joined = spine.join(agg_df, on=BUCKET, how="left")
     cols = [F.col(BUCKET)]
     for name in extra_cols or []:
         cols.append(F.col(name))

@@ -9,10 +9,14 @@ Reference: query/query-timeseries.md:1-95. Semantics implemented here:
    aggregator's identity (:74-93) unless ``context.skipEmptyBuckets`` (:95)
 
 Plan shape: scan (interval+filter pushed down) → date_trunc groupBy →
-partial/final HashAggregate → post-agg projection → broadcast left-join
-against the generated bucket spine → sort. At 100 TB the only shuffle is
-the aggregation exchange, keyed by the (low-cardinality) bucket — AQE
-coalesces the tiny post-agg side; the spine join is broadcast.
+partial/final HashAggregate → post-agg projection → left-join of the
+one-partition bucket spine against the broadcast aggregate → local sort.
+At 100 TB the only shuffle is the aggregation exchange, keyed by the
+(low-cardinality) bucket — AQE coalesces the tiny post-agg side; the
+spine join is broadcast, and its single-partition output needs no
+range-partition exchange to be ordered (``zero_fill``). Without
+zero-fill, and above ZERO_FILL_BROADCAST_MAX spine buckets, the sort is
+a global one.
 """
 
 from __future__ import annotations

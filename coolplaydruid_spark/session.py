@@ -70,11 +70,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def configure_runtime(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an existing session
-    (used when the caller — e.g. the verify driver — owns the session)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return spark
