@@ -3,9 +3,13 @@ plans stay the ones the scale design requires — pushed filters, partition
 pruning, broadcast joins, no stray shuffles. These catch performance
 regressions unit tests can't see (SCALE.md is the spec)."""
 
+import uuid
+
+import pytest
 from pyspark.sql import functions as F
 
 from coolplaydruid_spark.operators import similarity
+from coolplaydruid_spark.plans import common
 from coolplaydruid_spark.sources import batch
 from tests.conftest import SF_DIR
 
@@ -246,6 +250,48 @@ def test_zero_fill_spine_is_local_table_scan(engine):
     plan = _plan(df)
     assert "ExistingRDD" not in plan
     assert "LocalTableScan" in plan
+
+
+def _zero_filled_week(descending: bool = False) -> dict:
+    return {
+        "queryType": "timeseries",
+        "dataSource": "events",
+        "granularity": "day",
+        "descending": descending,
+        "aggregations": [{"type": "count", "name": "n"}],
+        "intervals": ["2024-01-01T00:00:00/2024-01-08T00:00:00"],
+    }
+
+
+@pytest.mark.parametrize("descending", [False, True])
+def test_zero_fill_sorts_locally_in_three_jobs(engine, descending):
+    """A small spine is read as one partition, so the zero-filled result
+    is ordered by a local sort: no range-partition exchange, whose
+    sampling job, shuffle-map job and result stage made the query 5 Spark
+    jobs. What is left: the aggregation shuffle, the broadcast of the
+    aggregate side and the result job."""
+    query = _zero_filled_week(descending)
+    assert "rangepartitioning" not in _plan(engine.plan(query))
+
+    query_id = f"zero-fill-jobs-{uuid.uuid4()}"
+    rows = engine.execute({**query, "context": {"queryId": query_id, "useCache": False}})
+    stamps = [r["timestamp"] for r in rows]
+    assert len(stamps) == 7 and stamps == sorted(stamps, reverse=descending)
+    jobs = engine.spark.sparkContext.statusTracker().getJobIdsForGroup(query_id)
+    assert 0 < len(jobs) <= 3
+
+
+def test_zero_fill_large_spine_keeps_its_partitions(engine, monkeypatch):
+    """Above ZERO_FILL_BROADCAST_MAX the join is not forced to broadcast,
+    and the spine is not squeezed into one partition: the plan keeps the
+    multi-partition spine and sorts globally. The answer is unchanged."""
+    query = _zero_filled_week()
+    small = engine.execute({**query, "context": {"useCache": False}})
+    monkeypatch.setattr(common, "ZERO_FILL_BROADCAST_MAX", 3)
+    plan = _plan(engine.plan(query))
+    assert "Coalesce" not in plan
+    assert "rangepartitioning" in plan
+    assert engine.execute({**query, "context": {"useCache": False}}) == small
 
 
 def test_contract_sweep_no_cartesian_products(engine):

@@ -4,10 +4,20 @@ Usage: python tools/plan_digest.py [sf_dir] [name_substr ...] — the same
 arguments as tools/check_contract.py; sf_dir defaults to the test suite's
 fixture scale.
 
-The digest is the md5 of ``optimizedPlan().toString()`` with expression
-ids (``#123``, ``#123L``) stripped; those are per-session counters, so
-the same plan gives the same digest in any process. Nothing is
-collected: building the optimized plan runs no Spark job."""
+The digest is the md5 of ``optimizedPlan().toString()`` with the parts
+that vary from process to process stripped, so the same plan gives the
+same digest in any run:
+ - expression ids (``#123``, ``#123L``) and exchange ids
+   (``[plan_id=123]``), per-session counters; a cached relation prints
+   its physical plan, exchanges included;
+ - AQE query-stage numbers (``BroadcastQueryStage 3``) in cached
+   relations that were executed;
+ - the pid in the per-process signature-store directory
+   (``coolplaydruid_sigstore/<sf key>-<pid>``, see contract._proc_store_root).
+
+The digest itself collects nothing, but composing some contract entries
+does run Spark jobs: operator pipelines persist and count intermediate
+frames, and the from-store entries write their signature store first."""
 
 from __future__ import annotations
 
@@ -24,12 +34,19 @@ from coolplaydruid_spark.session import get_spark  # noqa: E402
 from tests.conftest import SF_DIR  # noqa: E402
 from tools.check_contract import matching  # noqa: E402
 
-_EXPR_ID = re.compile(r"#\d+L?")
+_VOLATILE = [
+    (re.compile(r"#\d+L?"), ""),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"(QueryStage) \d+"), r"\1"),
+    (re.compile(r"(coolplaydruid_sigstore/[0-9a-f]+)-\d+"), r"\1-"),
+]
 
 
 def plan_digest(df) -> str:
     plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-    return hashlib.md5(_EXPR_ID.sub("", plan).encode()).hexdigest()
+    for pattern, repl in _VOLATILE:
+        plan = pattern.sub(repl, plan)
+    return hashlib.md5(plan.encode()).hexdigest()
 
 
 def main(argv: list[str]) -> int:
