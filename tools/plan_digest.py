@@ -10,8 +10,9 @@ same digest in any run:
  - expression ids (``#123``, ``#123L``) and exchange ids
    (``[plan_id=123]``), per-session counters; a cached relation prints
    its physical plan, exchanges included;
- - AQE query-stage numbers (``BroadcastQueryStage 3``) in cached
-   relations that were executed;
+ - AQE query-stage numbers (``BroadcastQueryStage 3``) and whole-stage
+   codegen ids (``*(3)``) in cached relations that were executed: both
+   follow the order in which concurrent stages happened to run;
  - the pid in the per-process signature-store directory
    (``coolplaydruid_sigstore/<sf key>-<pid>``, see contract._proc_store_root).
 
@@ -38,6 +39,7 @@ _VOLATILE = [
     (re.compile(r"#\d+L?"), ""),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"(QueryStage) \d+"), r"\1"),
+    (re.compile(r"\*\(\d+\)"), "*"),
     (re.compile(r"(coolplaydruid_sigstore/[0-9a-f]+)-\d+"), r"\1-"),
 ]
 
