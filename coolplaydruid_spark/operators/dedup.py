@@ -454,7 +454,7 @@ def minhash_lsh_dedup_incremental(
         # Same guard as corpus.source_overlap_incremental (r10): a
         # re-appended/retried store partition that duplicates
         # (id, shingle) rows would inflate n_shingles AND corrupt
-        # _verify_jaccard's seen-twice intersection trick (it assumes
+        # _verify_jaccard's shingle-set intersection (it assumes
         # shingles are distinct per document) — a doubled corpus doc
         # would falsely drop batch docs. Minhash minima are
         # duplicate-insensitive, so the distinct exists purely for the
@@ -698,14 +698,13 @@ def _attach_sizes_and_score(co: DataFrame, sizes: DataFrame, threshold: float,
 
 def _verify_jaccard(candidates: DataFrame, sh: DataFrame, threshold: float,
                     id_col: str, sizes: DataFrame | None = None,
-                    cache: bool = True, via: str = "arrays") -> DataFrame:
+                    cache: bool = True) -> DataFrame:
     """Exact Jaccard for an explicit candidate-pair set (pairs must be
-    DISTINCT — a duplicated pair would double the explode path's
-    seen-twice counts; the minhash pipeline guarantees this with
-    .distinct()). ``sizes`` ((id, n_shingles)) can be supplied by a
-    caller that already computed set sizes in an earlier aggregation
-    pass (the minhash signature groupBy yields it for free), saving one
-    full re-scan of the corpus.
+    DISTINCT — a duplicated pair would be scored and emitted twice; the
+    minhash pipeline guarantees this with .distinct()). ``sizes`` ((id,
+    n_shingles)) can be supplied by a caller that already computed set
+    sizes in an earlier aggregation pass (the minhash signature groupBy
+    yields it for free), saving one full re-scan of the corpus.
 
     Join strategy is left to AQE: the candidate set is usually small,
     but degenerate blocking (a stop-shingle shared by d docs yields d²
@@ -721,7 +720,7 @@ def _verify_jaccard(candidates: DataFrame, sh: DataFrame, threshold: float,
     degenerates and the member set IS corpus-scale, AQE falls back to a
     shuffle semi-join, which is exactly the right price then.
 
-    ``via="arrays"`` (default, r15 — guide §2.3 shuffle fewer records):
+    Intersection by arrays (r15 — guide §2.3 shuffle fewer records):
     pack each member's reduced shingle set into ONE array row
     (collect_list over sh_c — shingles are distinct per doc, so the
     array is a set), attach the two arrays to each candidate pair with
@@ -732,11 +731,8 @@ def _verify_jaccard(candidates: DataFrame, sh: DataFrame, threshold: float,
     candidates — where the array path moves the same bytes as 2×|pairs|
     array records and needs no post-join aggregation at all. Per-pair
     blowup for hub docs (one doc's set duplicated once per pair it
-    appears in) is identical between the two shapes.
-
-    ``via="explode"`` keeps the r14 shape (the reference the
-    equivalence test pins): explode each pair into its members, join
-    member → shingles, count shingles seen twice per pair.
+    appears in) is identical between the two shapes; the explode shape
+    stays in the tests as the reference this one must equal.
 
     The candidate set is pinned (bounded _pin_cache) before use: it is
     consumed twice here (members + pair attach), and WITHOUT the pin
@@ -755,55 +751,33 @@ def _verify_jaccard(candidates: DataFrame, sh: DataFrame, threshold: float,
         .distinct()
     )
     sh_c = sh.join(members, on=id_col, how="left_semi")
-    if via == "arrays":
-        sets = sh_c.groupBy(id_col).agg(
-            F.collect_list("shingle").alias("__set"))
-        if cache:
-            # sets feeds BOTH attach joins (doc_a and doc_b) — unpinned,
-            # Catalyst plans the collect_list + semi-join reduction once
-            # per side (plan audit: the whole subtree appeared twice).
-            # Member-scale rows (dup-proportional, never corpus-scale).
-            sets = _pin_cache(sets)
-        sa = sets.select(F.col(id_col).alias("doc_a"),
-                         F.col("__set").alias("__sa"))
-        sb = sets.select(F.col(id_col).alias("doc_b"),
-                         F.col("__set").alias("__sb"))
-        pair_sh = (
-            candidates.join(sa, on="doc_a").join(sb, on="doc_b")
-            .select(
-                "doc_a", "doc_b",
-                F.size(F.array_intersect("__sa", "__sb"))
-                .cast("long").alias("n_common"),
-            )
-            # the explode path never emits a zero-common pair (no
-            # shingle is seen twice); match it exactly so a threshold
-            # of 0.0 cannot change the row set
-            .where(F.col("n_common") >= 1)
+    sets = sh_c.groupBy(id_col).agg(
+        F.collect_list("shingle").alias("__set"))
+    if cache:
+        # sets feeds BOTH attach joins (doc_a and doc_b) — unpinned,
+        # Catalyst plans the collect_list + semi-join reduction once
+        # per side (plan audit: the whole subtree appeared twice).
+        # Member-scale rows (dup-proportional, never corpus-scale).
+        sets = _pin_cache(sets)
+    sa = sets.select(F.col(id_col).alias("doc_a"),
+                     F.col("__set").alias("__sa"))
+    sb = sets.select(F.col(id_col).alias("doc_b"),
+                     F.col("__set").alias("__sb"))
+    pair_sh = (
+        candidates.join(sa, on="doc_a").join(sb, on="doc_b")
+        .select(
+            "doc_a", "doc_b",
+            F.size(F.array_intersect("__sa", "__sb"))
+            .cast("long").alias("n_common"),
         )
-        if sizes is None:
-            sizes = sets.select(
-                F.col(id_col), F.size("__set").cast("long").alias("n_shingles"))
-    elif via == "explode":
-        pair_members = candidates.select(
-            "doc_a", "doc_b", F.explode(F.array("doc_a", "doc_b")).alias(id_col)
-        )
-        pair_sh = (
-            pair_members.join(sh_c, on=id_col)
-            .groupBy("doc_a", "doc_b", "shingle")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .where(F.col("__c") == 2)
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        if sizes is None:
-            # Only candidate-pair members' sizes are ever consumed —
-            # compute them from the semi-join-reduced sh_c, not the
-            # corpus-scale sh (a full-corpus groupBy here would re-add
-            # exactly the shuffle the reduction above removed).
-            sizes = sh_c.groupBy(id_col).agg(
-                F.count(F.lit(1)).alias("n_shingles"))
-    else:
-        raise ValueError(f"via must be 'arrays' or 'explode', got {via!r}")
+        # a pair sharing no shingle is never emitted (the explode
+        # reference has no row for it), so a threshold of 0.0 cannot
+        # change the row set
+        .where(F.col("n_common") >= 1)
+    )
+    if sizes is None:
+        sizes = sets.select(
+            F.col(id_col), F.size("__set").cast("long").alias("n_shingles"))
     return _attach_sizes_and_score(pair_sh, sizes, threshold, id_col)
 
 

@@ -296,7 +296,7 @@ def zero_fill(
     agg_df: DataFrame,
     spine: DataFrame,
     fills: dict[str, object],
-    extra_cols: list[str] | None = None,
+    dims: list[str] | None = None,
     spine_rows: int | None = None,
 ) -> DataFrame:
     """Left-join aggregates onto the bucket spine and substitute each
@@ -313,14 +313,30 @@ def zero_fill(
     and the spine keeps its partitions — the aggregate side is
     spine-sized too, and forcing a multi-million-row broadcast would hit
     Spark's broadcast cap where AQE can pick a shuffle join.
+
+    With ``dims`` (movingAverage's dimensions) every bucket is filled
+    for every dimension combination the aggregate holds: the grid is the
+    distinct dimension values crossed with the (broadcast, when small)
+    spine, and the aggregate left-joins onto it on bucket and dims. The
+    dims match null-safely: a null dimension value is a group of its own
+    (a listFiltered row with no element left, a row without the
+    dimension), and a plain equi-join would identity-fill it. Both sides
+    are aggregated-cardinality, so the grid join shuffles rows that are
+    already grouped, never the data.
     """
     small = spine_rows is None or spine_rows <= ZERO_FILL_BROADCAST_MAX
-    if small:
-        spine, agg_df = spine.coalesce(1), F.broadcast(agg_df)
-    joined = spine.join(agg_df, on=BUCKET, how="left")
-    cols = [F.col(BUCKET)]
-    for name in extra_cols or []:
-        cols.append(F.col(name))
+    if dims:
+        combos = agg_df.select(*[F.col(d).alias(f"__grid_{d}") for d in dims]).distinct()
+        grid = combos.crossJoin(F.broadcast(spine) if small else spine)
+        on = [grid[BUCKET] == agg_df[BUCKET]]
+        on += [grid[f"__grid_{d}"].eqNullSafe(agg_df[d]) for d in dims]
+        joined = grid.join(agg_df, on, how="left")
+        cols = [grid[BUCKET], *[grid[f"__grid_{d}"].alias(d) for d in dims]]
+    else:
+        if small:
+            spine, agg_df = spine.coalesce(1), F.broadcast(agg_df)
+        joined = spine.join(agg_df, on=BUCKET, how="left")
+        cols = [F.col(BUCKET)]
     for name, fill in fills.items():
         if fill is None:
             cols.append(F.col(name))

@@ -23,13 +23,17 @@ Semantics implemented (matching the public extension):
    over its `fieldName` (an aggregator or postAggregator output) with a
    `buckets`-row trailing window.
 
-Plan shape & scale: the inner aggregation is the ordinary timeseries/
-groupBy plan (ONE data shuffle keyed on bucket × dims, partial→final
-HashAggregate). Everything after it — spine cross-join, window, trim —
-operates on aggregated rows (#buckets × #dimension-values), orders of
-magnitude smaller than the input; the window partitions by the
-dimension columns, so no single-partition global sort appears even with
-millions of dimension values.
+Plan shape & scale: the inner aggregation is the shared core of
+timeseries/topN/groupBy (``plans/common.Aggregation``: ONE data shuffle
+keyed on bucket × dims, partial→final HashAggregate), so movingAverage
+accepts every input its groupBy inner query does — multi-value and
+listFiltered dimensions, thetaSketch aggregators. The grid zero-fill is
+``plans/common.zero_fill`` over the dimensions. Everything after the
+aggregation — grid join, window, trim — operates on aggregated rows
+(#buckets × #dimension-values), orders of magnitude smaller than the
+input; the window partitions by the dimension columns, so no
+single-partition global sort appears even with millions of dimension
+values.
 """
 
 from __future__ import annotations
@@ -39,19 +43,15 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from coolplaydruid_spark.catalog import TIME_COLUMN
 from coolplaydruid_spark.errors import UnknownQueryError
-from coolplaydruid_spark.functions.aggregators import compile_aggregators
-from coolplaydruid_spark.functions.extraction import dimension_column
 from coolplaydruid_spark.functions.granularity import parse_granularity, parse_interval
-from coolplaydruid_spark.functions.postaggs import compile_post_aggregators
 from coolplaydruid_spark.plans.common import (
     BUCKET,
     ZERO_FILL_BROADCAST_MAX,
+    Aggregation,
     bucket_spine,
-    filtered_frame,
-    grouped_agg,
     query_intervals,
+    zero_fill,
 )
 
 _AVERAGER_FNS = {
@@ -81,7 +81,6 @@ def _expand_intervals(gran, intervals: list[str], warmup: int) -> list[str]:
 
 
 def plan_moving_average(engine, query: dict) -> DataFrame:
-    df = engine.resolve_datasource(query["dataSource"])
     context = query.get("context") or {}
     gran = parse_granularity(query.get("granularity", "all"))
     if gran.kind in ("all", "none"):
@@ -104,41 +103,18 @@ def plan_moving_average(engine, query: dict) -> DataFrame:
     warmup = max((int(av.get("buckets", 1)) for av in averagers), default=1) - 1
     expanded = _expand_intervals(gran, intervals, warmup)
 
-    # Inner aggregation over the EXPANDED intervals — ordinary
-    # bucket × dims groupBy, the one data-sized shuffle in the plan.
-    inner_q = dict(query, intervals=expanded)
-    base = filtered_frame(df, inner_q, engine=engine)
-    aggs = compile_aggregators(query.get("aggregations"), context, df=base)
-    dim_cols, dim_names = [], []
-    for spec in query.get("dimensions") or []:
-        col, name = dimension_column(spec)
-        dim_cols.append(col.alias(name))
-        dim_names.append(name)
-    keys = [gran.bucket(F.col(TIME_COLUMN)).alias(BUCKET), *dim_cols]
-    agg_df = grouped_agg(base, keys, [BUCKET, *dim_names], aggs)
-
-    # Zero-fill the full spine × dimension-combination grid: averagers
-    # must see explicit zero rows for empty buckets (fixed denominator).
-    # Both sides of the cross join are aggregated-cardinality, and the
-    # spine side is broadcast.
+    # Inner aggregation over the EXPANDED intervals — the shared core,
+    # the one data-sized shuffle in the plan — zero-filled over the full
+    # spine × dimension-combination grid: averagers must see explicit
+    # identity rows for empty buckets (fixed denominator).
+    core = Aggregation(engine, dict(query, intervals=expanded), query.get("dimensions") or [])
+    dim_names = core.dim_names
     spine, n_buckets = bucket_spine(
         engine.spark, gran, expanded, max_buckets=context.get("maxZeroFillBuckets")
     )
-    small = n_buckets <= ZERO_FILL_BROADCAST_MAX
-    if dim_names:
-        combos = agg_df.select(*dim_names).distinct()
-        grid = combos.crossJoin(F.broadcast(spine) if small else spine)
-        filled = grid.join(agg_df, on=[BUCKET, *dim_names], how="left")
-    else:
-        filled = spine.join(F.broadcast(agg_df) if small else agg_df, on=BUCKET, how="left")
-    fill_cols = [F.col(BUCKET), *[F.col(d) for d in dim_names]]
-    for name, fill in aggs.fills.items():
-        c = F.col(name) if fill is None else F.coalesce(F.col(name), F.lit(fill))
-        fill_cols.append(c.alias(name))
-    filled = filled.select(*fill_cols)
-
-    for name, col in compile_post_aggregators(query.get("postAggregations")):
-        filled = filled.withColumn(name, col)
+    filled = core.frame(
+        fill=lambda df, fills: zero_fill(df, spine, fills, dims=dim_names, spine_rows=n_buckets)
+    )
 
     # With no dimensions the window is a single partition — by design:
     # its input is the aggregated series (#buckets rows, e.g. 365 for a

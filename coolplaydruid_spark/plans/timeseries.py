@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from coolplaydruid_spark.functions.postaggs import compile_post_aggregators
 from coolplaydruid_spark.plans.common import (
     BUCKET,
     Aggregation,
@@ -82,12 +81,10 @@ def plan_timeseries(engine, query: dict) -> DataFrame:
         # filtered base (not the bucket rows) keeps non-additive
         # aggregators (min/max/first/last/cardinality) exact; post-aggs
         # then evaluate on the total row like any other.
-        total = _global_agg(core.base, core.aggs).select(
-            F.lit(None).cast("timestamp").alias(BUCKET),
-            *[F.col(n) for n in core.aggs.names],
+        null_key = F.lit(None).cast("timestamp").alias(BUCKET)
+        total = core.frame(
+            group=lambda base, _keys, names, aggs: _one_row(base, [null_key], names, aggs)
         )
-        for name, col in compile_post_aggregators(query.get("postAggregations")):
-            total = total.withColumn(name, col)
         # nulls sort first under asc in Spark — force the total row last
         # on BOTH orders with a rank column dropped after the sort.
         out = (

@@ -520,21 +520,14 @@ def index_task(
         ts = F.col(time_column).cast("timestamp")
         df = df.withColumn(time_column, ts)
         if transform_spec:
-            from coolplaydruid_spark.functions.druidexpr import (
-                DruidExprError,
-                compile_druid_expr,
-            )
             from coolplaydruid_spark.functions.filters import compile_filter
+            from coolplaydruid_spark.plans.common import apply_virtual_columns
 
-            # Same dialect priority as virtualColumns (plans/common.py):
-            # Druid's expression language first (a real ingestion spec's
+            # Transforms are virtualColumns computed at ingest: Druid's
+            # expression language first (a real ingestion spec's
             # transformSpec runs unmodified), Spark SQL as fallback.
-            for t in transform_spec.get("transforms") or []:
-                try:
-                    col = compile_druid_expr(t["expression"], df)
-                except DruidExprError:
-                    col = F.expr(t["expression"])
-                df = df.withColumn(t["name"], col)
+            df = apply_virtual_columns(
+                df, {"virtualColumns": transform_spec.get("transforms")})
             flt = compile_filter(transform_spec.get("filter"), df)
             if flt is not None:
                 df = df.filter(flt)

@@ -12,10 +12,10 @@ from coolplaydruid_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-# Aggregator inputs for the timeseries/topN ≡ groupBy identity tests, one
-# per path of the shared aggregation core: a thetaSketch alone (placeholder
-# count) with an arithmetic post-agg over its estimate (hoisted), and a
-# filtered aggregator.
+# Aggregator inputs for the timeseries/topN/movingAverage ≡ groupBy identity
+# tests, one per path of the shared aggregation core: a thetaSketch alone
+# (placeholder count) with an arithmetic post-agg over its estimate
+# (hoisted), and a filtered aggregator.
 THETA_USERS = {"type": "thetaSketch", "name": "users", "fieldName": "user_id"}
 USERS_X2 = {
     "type": "arithmetic", "name": "users_x2", "fn": "*",
@@ -29,6 +29,12 @@ FILTERED_BIG = {
     "filter": {"type": "bound", "dimension": "value", "lower": "100", "ordering": "numeric"},
     "aggregator": {"type": "doubleSum", "name": "big", "fieldName": "value"},
 }
+# A multi-value dimension on events: each row is its event_type and its
+# size class. Multi-value and listFiltered dimensions explode before grouping.
+KINDS = [{
+    "type": "expression", "name": "kinds", "dialect": "sql",
+    "expression": "array(event_type, CASE WHEN value >= 100 THEN 'big' ELSE 'small' END)",
+}]
 
 
 @pytest.fixture(scope="session")

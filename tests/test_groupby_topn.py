@@ -4,7 +4,7 @@ dataSources and union dataSources."""
 
 import pytest
 
-from tests.conftest import FILTERED_BIG, THETA_USERS, USERS_X2, assert_df_matches_duck
+from tests.conftest import FILTERED_BIG, KINDS, THETA_USERS, USERS_X2, assert_df_matches_duck
 
 INTERVAL = ["2024-01-01T00:00:00/2024-02-01T00:00:00"]
 
@@ -57,12 +57,6 @@ def test_groupby_having_limit(engine, duck):
     assert_df_matches_duck(df, duck, sql)
 
 
-# A multi-value dimension on events: each row is its event_type and its
-# size class. Multi-value and listFiltered dimensions explode before grouping.
-KINDS = [{
-    "type": "expression", "name": "kinds", "dialect": "sql",
-    "expression": "array(event_type, CASE WHEN value >= 100 THEN 'big' ELSE 'small' END)",
-}]
 TOTAL = [{"type": "doubleSum", "name": "total", "fieldName": "value"}]
 
 

@@ -1,11 +1,15 @@
 """movingAverage query-type semantics: warm-up interval expansion,
-zero-fill denominators, dimension partitioning, and error cases."""
+zero-fill denominators, dimension partitioning, error cases, and the
+inner aggregation's identity with groupBy."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pytest
 
 from coolplaydruid_spark.errors import UnknownQueryError
+from tests.conftest import KINDS, THETA_USERS
 
 
 def _mavg(engine, **overrides):
@@ -100,3 +104,45 @@ def test_minmax_fields_skip_empty_buckets(engine):
             assert r.avg3 >= 999.99
         # count DOES zero-fill
         assert r.rows is not None
+
+
+ROWS = {"type": "count", "name": "rows"}
+TOTAL = {"type": "doubleSum", "name": "total", "fieldName": "value"}
+LIST_FILTERED = {
+    "type": "listFiltered", "values": ["click", "view", "big"],
+    "delegate": {"type": "default", "dimension": "kinds", "outputName": "kind"},
+}
+
+
+@pytest.mark.parametrize("dimension,aggs,vcols", [
+    pytest.param("event_type", [ROWS, TOTAL], [], id="sum"),
+    pytest.param("kinds", [ROWS, TOTAL], KINDS, id="multi_value"),
+    pytest.param(LIST_FILTERED, [ROWS, TOTAL], KINDS, id="list_filtered"),
+    pytest.param("event_type", [ROWS, THETA_USERS], [], id="theta"),
+])
+def test_one_bucket_sum_equals_groupby(engine, dimension, aggs, vcols):
+    """The inner aggregation is a groupBy: a one-bucket doubleSum of
+    ``rows`` is ``rows`` itself on every cell, and the non-empty cells
+    are exactly the groupBy's rows, for every dimension and aggregator
+    kind the groupBy accepts (multi-value dimensions group per element)."""
+    common = {
+        "dataSource": "events",
+        "granularity": "day",
+        "intervals": ["2024-01-08T00:00:00/2024-01-15T00:00:00"],
+        "virtualColumns": vcols,
+        "dimensions": [dimension],
+        "aggregations": aggs,
+    }
+    averager = {"type": "doubleSum", "name": "rows1", "fieldName": "rows", "buckets": 1}
+    mavg = engine.plan(dict(common, queryType="movingAverage", averagers=[averager]))
+    gb = engine.plan(dict(common, queryType="groupBy"))
+
+    def rows(df):
+        return Counter(
+            tuple(round(v, 6) if isinstance(v, float) else v for v in r) for r in df.collect()
+        )
+
+    assert all(r.rows1 == r.rows for r in mavg.collect())
+    expect = rows(gb)
+    assert rows(mavg.where("rows > 0").select(*gb.columns)) == expect
+    assert expect

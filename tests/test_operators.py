@@ -387,12 +387,40 @@ def test_banded_hamming_group_dedup_matches_direct_join(engine):
     _dedup.release_caches()
 
 
+def _verify_jaccard_explode(candidates, sh, threshold, id_col, sizes=None):
+    """The r14 shape of dedup._verify_jaccard, kept as its reference:
+    explode each pair into its members, join member → shingles, count
+    the shingles seen twice per pair."""
+    from coolplaydruid_spark.operators import dedup as _dedup
+
+    members = (
+        candidates.select(F.explode(F.array("doc_a", "doc_b")).alias(id_col))
+        .distinct()
+    )
+    sh_c = sh.join(members, on=id_col, how="left_semi")
+    pair_members = candidates.select(
+        "doc_a", "doc_b", F.explode(F.array("doc_a", "doc_b")).alias(id_col)
+    )
+    pair_sh = (
+        pair_members.join(sh_c, on=id_col)
+        .groupBy("doc_a", "doc_b", "shingle")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .where(F.col("__c") == 2)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    if sizes is None:
+        sizes = sh_c.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
+    return _dedup._attach_sizes_and_score(pair_sh, sizes, threshold, id_col)
+
+
 def test_verify_jaccard_arrays_matches_explode(engine):
     """r15 focused gate for the array-intersect verify (guide §2.3):
-    via='arrays' (one collect_list per member + in-row array_intersect)
-    must equal via='explode' (the r14 per-(pair,shingle) groupBy)
-    pair-for-pair and jaccard-for-jaccard. Run through the full minhash
-    pipeline at a low threshold so the candidate set is rich."""
+    dedup._verify_jaccard (one collect_list per member + in-row
+    array_intersect) must equal the r14 per-(pair,shingle) groupBy
+    (_verify_jaccard_explode) pair-for-pair and jaccard-for-jaccard.
+    Run through the full minhash pipeline at a low threshold so the
+    candidate set is rich."""
     from coolplaydruid_spark.operators import dedup as _dedup
 
     docs = engine.catalog.table("documents")
@@ -412,12 +440,13 @@ def test_verify_jaccard_arrays_matches_explode(engine):
     out = {}
     sizes = sig.select("doc_id", "n_shingles")
     # caller-supplied sizes (the minhash shape) AND the sizes=None branch
-    # (sizes derived from the reduced sets) must both be via-invariant
+    # (sizes derived from the reduced sets) must both be shape-invariant
     for sz in (sizes, None):
-        for via in ("arrays", "explode"):
+        for via, verify in (("arrays", _dedup._verify_jaccard),
+                            ("explode", _verify_jaccard_explode)):
             _dedup.release_caches()
-            out[via] = sorted(map(key, _dedup._verify_jaccard(
-                cands, sh, 0.05, "doc_id", sizes=sz, via=via).collect()))
+            out[via] = sorted(map(key, verify(
+                cands, sh, 0.05, "doc_id", sizes=sz).collect()))
         assert out["arrays"] == out["explode"] and out["arrays"]
     _dedup.release_caches()
 
