@@ -1,6 +1,6 @@
 """Shared planning helpers: interval filtering, the filtered base frame,
-the aggregation core of timeseries/topN/groupBy, and the zero-fill
-bucket spine."""
+the aggregation core of timeseries/topN/groupBy/movingAverage, and the
+zero-fill bucket spine."""
 
 from __future__ import annotations
 
@@ -197,16 +197,19 @@ def dimension_columns(base: DataFrame, dimensions: list) -> tuple[DataFrame, lis
 
 
 class Aggregation:
-    """The aggregation pipeline timeseries, topN and groupBy share —
-    timeseries is groupBy with no dimensions and topN is groupBy on one
-    dimension plus order and limit (query/query-module-overview.md:51-53).
+    """The aggregation pipeline timeseries, topN, groupBy and
+    movingAverage share — timeseries is groupBy with no dimensions, topN
+    is groupBy on one dimension plus order and limit
+    (query/query-module-overview.md:51-53), and movingAverage windows a
+    zero-filled groupBy.
 
     Construction resolves the dataSource, applies virtualColumns,
     intervals and filter, builds the grouping keys (time bucket, then
     the dimensions) and compiles the aggregators; :meth:`frame` runs the
     aggregation. The planners keep only what differs: timeseries' one-row
     global aggregate and zero-fill spine, topN's ranking, groupBy's
-    subtotalsSpec, having and limitSpec."""
+    subtotalsSpec, having and limitSpec, movingAverage's warm-up,
+    averager window and trim."""
 
     def __init__(self, engine, query: dict, dimensions: list = ()):
         self.context = query.get("context") or {}
